@@ -1080,11 +1080,8 @@ object Survival {
     // DuckDB oracle — which replays the same fixed dags — still hashes
     // identically; the gates at both SFs and the differential fuzz pin
     // that equivalence.
-    val riskRows = riskAll.collect()
-    require(riskRows.length <= graft.quality.BayesAb.maxDriverCells,
-      s"coxPhFromCells: ${riskRows.length} risk-grid rows exceed the driver-fold " +
-        s"bound ${graft.quality.BayesAb.maxDriverCells} — the grid must stay " +
-        "(covariate levels x integer durations)-bounded per the operator contract")
+    val riskRows = graft.quality.BayesAb.collectBounded(riskAll,
+      graft.quality.BayesAb.maxDriverCells, "coxPhFromCells")
     val rs = riskAll.schema
     val zi = rs.fieldIndex("__z"); val ti = rs.fieldIndex("t")
     val di = rs.fieldIndex("__d"); val ci = rs.fieldIndex("__c")
@@ -1293,11 +1290,8 @@ object Survival {
     // optimization; see the determinism note there): every float/decimal
     // op replicates the engine expression it replaced bit-for-bit, the
     // Cramer determinant and step numerators stay EXACT BigInt.
-    val riskRows = riskAll.collect()
-    require(riskRows.length <= graft.quality.BayesAb.maxDriverCells,
-      s"coxPh2FromCells: ${riskRows.length} risk-grid rows exceed the driver-fold " +
-        s"bound ${graft.quality.BayesAb.maxDriverCells} — the grid must stay " +
-        "(covariate levels x integer durations)-bounded per the operator contract")
+    val riskRows = graft.quality.BayesAb.collectBounded(riskAll,
+      graft.quality.BayesAb.maxDriverCells, "coxPh2FromCells")
     val rs = riskAll.schema
     val ti = rs.fieldIndex("t")
     val di = rs.fieldIndex("__d"); val ci = rs.fieldIndex("__c")

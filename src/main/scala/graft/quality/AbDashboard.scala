@@ -1,8 +1,9 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The composed A/B dashboard: ONE standing per-(arm, peek) moment-cell
   * state answering the ENTIRE guardrail-to-inference chain in one read —
@@ -33,14 +34,15 @@ import org.apache.spark.sql.functions._
   * this repo shares).
   *
   * SCALE: [[abCells]] is the only row-scale pass — one counting/moment
-  * aggregation, map-side combined. Everything downstream (spines,
-  * cumulative windows, the four stage reads, the final peek joins) runs
-  * over the (arms × peeks)-row cell frame: unpartitioned windows and
-  * tiny joins on a documented cardinality-bounded frame.
+  * aggregation, map-side combined. A reader collects the
+  * (arms × peeks)-row cell frame once, bounded, and builds the spine
+  * and the cumulative state on the driver ([[spine]]). The stage reads
+  * and the final peek joins then run over one-partition local
+  * relations, so their aggregates and windows need no exchanges.
   */
 object AbDashboard {
 
-  private val dec = "decimal(38,0)"
+  private val dec = DecimalType(38, 0)
 
   /** Per-(arm, peek) experiment moment cells from per-UNIT rows: unit
     * count n, conversion count s_hit, and exact DECIMAL sums of the
@@ -82,6 +84,111 @@ object AbDashboard {
         sum("sx").as("sx"), sum("sy").as("sy"),
         sum("sxx").as("sxx"), sum("syy").as("syy"), sum("sxy").as("sxy"))
 
+  /** Materialize a bounded frame ONCE as a local relation in ONE
+    * partition (arm × peek cardinality — the store bound, the house
+    * bounded-driver-fold idiom): the stage reads fan out from it, so the
+    * row-scale aggregation upstream executes exactly once instead of
+    * once per stage branch, and the aggregates and windows of the gated
+    * stage operators over it need no exchanges.
+    *
+    * EAGER-EXECUTION CONTRACT (inherited by every from-cells reader
+    * here): ONE bounded collect ([[BayesAb.collectBounded]]) runs AT
+    * CONSTRUCTION TIME of the reading frame, not at its first action —
+    * including any row-scale per-unit pass upstream of `cells`;
+    * constructing the same read twice runs that chain twice, and the
+    * read cannot be composed lazily over cells that do not exist yet
+    * (inside a streaming foreachBatch, construct the read within the
+    * batch function). Everything after the collect — the spines below
+    * included — is built on the driver: no further construction jobs.
+    */
+  private[graft] def materialize(cells: DataFrame): DataFrame =
+    localFrame(cells.sparkSession,
+      BayesAb.collectBounded(cells, BayesAb.maxDriverCells, "materialize").toSeq,
+      cells.schema)
+
+  /** Rows as a local relation laid out in one partition (`coalesce(1)`
+    * adds no shuffle).
+    */
+  private def localFrame(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
+  /** The (keys × arm × peek) spine + per-series cumulative state of a
+    * cell frame, built ON THE DRIVER from its one bounded collect:
+    *
+    *   - `full`: the per-peek increments, zero-filled over (distinct
+    *     keys) × (cell arms ∪ `designedArms`) × (distinct peeks) — a
+    *     designed arm is always present (a vanished arm still
+    *     SRM-checks and NULLs its effect columns), every arm is carried
+    *     through every peek so cumulative reads see complete series;
+    *   - `cum`: the running sums per (keys, arm) in peek order — the
+    *     "dashboard at peek p".
+    *
+    * Columns: `keys` and `arm` as strings, `peek` as long, then
+    * `measures` with their declared types (LONG or DECIMAL(38,0)). Every
+    * sum is exact, so no value depends on row order. The additive fold
+    * shape has one row per cell: a NULL key/arm/peek or a duplicate cell
+    * fails loudly, naming the cell; a NULL measure reads as zero.
+    */
+  private[graft] def spine(
+      cells: DataFrame,
+      keys: Seq[String],
+      designedArms: Seq[String],
+      measures: Seq[(String, DataType)]
+  ): (DataFrame, DataFrame) = {
+    val dims = keys :+ "arm"
+    val local = cells.select(dims.map(k => col(k).cast("string").as(k)) ++
+      (col("peek").cast("long").as("peek") +:
+        measures.map { case (m, t) => col(m).cast(t).as(m) }): _*)
+    val rows = BayesAb.collectBounded(local, BayesAb.maxDriverCells, "spine")
+    val nd = dims.size
+    val zero: Seq[Any] = measures.map {
+      case (_, LongType) => 0L
+      case _ => java.math.BigDecimal.ZERO
+    }
+    val byCell = scala.collection.mutable.HashMap.empty[(Seq[String], Long), Seq[Any]]
+    for (r <- rows) {
+      def name = (dims :+ "peek").zip(r.toSeq.take(nd + 1))
+        .map { case (k, v) => s"$k=$v" }.mkString(", ")
+      require((0 to nd).forall(i => !r.isNullAt(i)), s"spine: NULL key in cell ($name)")
+      val key = (dims.indices.map(r.getString), r.getLong(nd))
+      require(!byCell.contains(key), s"spine: duplicate cell ($name) — the " +
+        "additive fold shape requires one increment row per cell")
+      byCell(key) = measures.indices.map(i =>
+        if (r.isNullAt(nd + 1 + i)) zero(i) else r.get(nd + 1 + i))
+    }
+    val series = byCell.keys.map(_._1.init).toSeq.distinct
+      .sorted(Ordering.Implicits.seqOrdering[Seq, String])
+    val arms = (byCell.keys.map(_._1.last) ++ designedArms).toSeq.distinct.sorted
+    val peeks = byCell.keys.map(_._2).toSeq.distinct.sorted
+    def add(a: Any, b: Any): Any = (a, b) match {
+      case (x: Long, y: Long) => Math.addExact(x, y)
+      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.add(y)
+    }
+    val fullRows = Seq.newBuilder[Row]
+    val cumRows = Seq.newBuilder[Row]
+    for (s <- series; a <- arms) {
+      var acc = zero
+      for (p <- peeks) {
+        val v = byCell.getOrElse((s :+ a, p), zero)
+        acc = acc.zip(v).map { case (x, y) => add(x, y) }
+        fullRows += Row.fromSeq((s :+ a) ++ (p +: v))
+        cumRows += Row.fromSeq((s :+ a) ++ (p +: acc))
+      }
+    }
+    val schema = StructType(dims.map(StructField(_, StringType)) ++
+      (StructField("peek", LongType) +:
+        measures.map { case (m, t) => StructField(m, t, nullable = false) }))
+    val spark = cells.sparkSession
+    (localFrame(spark, fullRows.result(), schema),
+      localFrame(spark, cumRows.result(), schema))
+  }
+
+  /** The [[abCells]] measures. */
+  private val abMeasures: Seq[(String, DataType)] =
+    Seq("n" -> LongType, "s_hit" -> LongType) ++
+      Seq("sx", "sy", "sxx", "syy", "sxy").map(_ -> dec)
+
   /** The one dashboard read: per peek (cumulative state up to and
     * including it), every stage of the A/B chain —
     *
@@ -103,83 +210,14 @@ object AbDashboard {
     * k-arm designs read [[Association.srmFromCounts]] directly). Arms in
     * the cells but not the design feed `n_unexpected` only. Peeks where
     * an arm has no cells yet contribute zero rows via the (arm × peek)
-    * spine — stages NULL their statistics there per their own guards
-    * rather than crash. Determinism: every stage is the gated operator's
-    * own fixed dag over exact cumulative counts/moments; outputs gate at
-    * 9dp in the query layer. One row per peek, peek-ordered reads.
+    * spine — a missing cell reads exactly like an all-zero one, and
+    * stages NULL their statistics there per their own guards rather
+    * than crash. Cells are one row per (arm, peek): a duplicate or a
+    * NULL arm/peek fails at construction ([[spine]]). Determinism:
+    * every stage is the gated operator's own fixed dag over exact
+    * cumulative counts/moments; outputs gate at 9dp in the query layer.
+    * One row per peek, peek-ordered reads.
     */
-  /** Materialize the cell state ONCE as a local relation (arm × peek
-    * cardinality — the store bound, the house bounded-driver-fold
-    * idiom): the stage reads fan out from it, so the row-scale cell
-    * aggregation upstream executes exactly once instead of once per
-    * stage branch — the shape that makes the one-read claim true in
-    * the physical plan, not just the API.
-    *
-    * EAGER-EXECUTION CONTRACT (inherited by every from-cells reader
-    * here): the upstream chain that produces `cells` — including any
-    * row-scale per-unit pass — runs AT CONSTRUCTION TIME of the
-    * dashboard frame, not at its first action; constructing the same
-    * read twice runs that chain twice, and the read cannot be composed
-    * lazily over cells that do not exist yet (inside a streaming
-    * foreachBatch, construct the read within the batch function).
-    */
-  private[graft] def materialize(cells: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows = cells.collect()
-    require(rows.length <= BayesAb.maxDriverCells,
-      s"materialize: ${rows.length} rows exceed the driver-fold bound " +
-        s"${BayesAb.maxDriverCells} — the frame must stay (arms x peeks)-" +
-        "bounded per the operator contract")
-    cells.sparkSession.createDataFrame(rows.toSeq.asJava, cells.schema)
-  }
-
-  /** The (arm × peek) spine + per-arm cumulative state over a local
-    * cell frame: designed arms always present (a vanished arm still
-    * SRM-checks and NULLs its effect columns), every arm carried
-    * through every peek so cumulative windows see complete series.
-    * Returns (full = per-peek increments on the spine, cum = cumulative
-    * state per arm in peek order — the "dashboard at peek p").
-    *
-    * MEASURED AND LEFT LAZY (r18): materializing `full`/`cum` here (the
-    * q365 truncate pattern) was Probe-tested and reverted — the stage
-    * branches re-execute only LOCAL dags, which run as parallel AQE
-    * sub-stages inside the one read action, while the two eager collect
-    * jobs serialize into construction (q345 2.92→3.10 s, q364
-    * 3.21→3.43 s, q336 +0.28 s). Truncation pays when the re-executed
-    * subtree is row-scale (see [[Association.metaAnalysis]]); here the
-    * row-scale pass already localized at [[materialize]](cells).
-    */
-  private def spineCum(local: DataFrame,
-      designedArms: Seq[String]): (DataFrame, DataFrame) = {
-    val spark = local.sparkSession
-    import spark.implicits._
-    val peeks = local.select(col("peek")).distinct()
-    val arms = local.select(col("arm")).distinct()
-      .unionByName(designedArms.toDF("arm")).distinct()
-    val zeroD = lit(0L).cast(dec)
-    val full = peeks.crossJoin(broadcast(arms))
-      .join(local, Seq("arm", "peek"), "left")
-      .select(col("arm"), col("peek"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        coalesce(col("s_hit"), lit(0L)).as("s_hit"),
-        coalesce(col("sx"), zeroD).as("sx"),
-        coalesce(col("sy"), zeroD).as("sy"),
-        coalesce(col("sxx"), zeroD).as("sxx"),
-        coalesce(col("syy"), zeroD).as("syy"),
-        coalesce(col("sxy"), zeroD).as("sxy"))
-    val wCum = Window.partitionBy(col("arm")).orderBy(col("peek"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = full.select(col("arm"), col("peek"),
-      sum("n").over(wCum).as("n"),
-      sum("s_hit").over(wCum).as("s_hit"),
-      sum("sx").over(wCum).cast(dec).as("sx"),
-      sum("sy").over(wCum).cast(dec).as("sy"),
-      sum("sxx").over(wCum).cast(dec).as("sxx"),
-      sum("syy").over(wCum).cast(dec).as("syy"),
-      sum("sxy").over(wCum).cast(dec).as("sxy"))
-    (full, cum)
-  }
-
   def abDashboardFromCells(
       cells: DataFrame,
       weights: Seq[(String, Double)],
@@ -189,8 +227,7 @@ object AbDashboard {
     require(weights.size == 2, s"the two-arm dashboard needs exactly 2 designed arms: $weights")
     val lo = weights.map(_._1).min
     val hi = weights.map(_._1).max
-    val local = materialize(cells)
-    val (full, cum) = spineCum(local, weights.map(_._1))
+    val (full, cum) = spine(cells, Nil, weights.map(_._1), abMeasures)
     val designed = col("arm") === lo || col("arm") === hi
     // stage 1 — SRM on the cumulative counts (all arms: off-design
     // traffic is the q306 n_unexpected read)
@@ -358,8 +395,7 @@ object AbDashboard {
     val treatments = weights.map(_._1).filterNot(_ == control).sorted
     val spark = cells.sparkSession
     import spark.implicits._
-    val local = materialize(cells)
-    val (full, cum) = spineCum(local, weights.map(_._1))
+    val (full, cum) = spine(cells, Nil, weights.map(_._1), abMeasures)
     // the comparison spine: each treatment arm paired with the control
     // (a tiny broadcast map over the bounded cell frame)
     val cmps = broadcast(treatments.toDF("cmp"))
@@ -445,31 +481,9 @@ object AbDashboard {
   private val moment2Cols = Seq("sy", "syy", "sx1", "sx2", "sx1x1",
     "sx2x2", "sx1x2", "sx1y", "sx2y")
 
-  /** The [[spineCum]] twin for the two-covariate cell shape (same
-    * measured-and-left-lazy note).
-    */
-  private def spineCum2(local: DataFrame,
-      designedArms: Seq[String]): (DataFrame, DataFrame) = {
-    val spark = local.sparkSession
-    import spark.implicits._
-    val peeks = local.select(col("peek")).distinct()
-    val arms = local.select(col("arm")).distinct()
-      .unionByName(designedArms.toDF("arm")).distinct()
-    val zeroD = lit(0L).cast(dec)
-    val full = peeks.crossJoin(broadcast(arms))
-      .join(local, Seq("arm", "peek"), "left")
-      .select(Seq(col("arm"), col("peek"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        coalesce(col("s_hit"), lit(0L)).as("s_hit")) ++
-        moment2Cols.map(m => coalesce(col(m), zeroD).as(m)): _*)
-    val wCum = Window.partitionBy(col("arm")).orderBy(col("peek"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = full.select(Seq(col("arm"), col("peek"),
-      sum("n").over(wCum).as("n"),
-      sum("s_hit").over(wCum).as("s_hit")) ++
-      moment2Cols.map(m => sum(m).over(wCum).cast(dec).as(m)): _*)
-    (full, cum)
-  }
+  /** The [[abCells2]] measures. */
+  private val ab2Measures: Seq[(String, DataType)] =
+    Seq("n" -> LongType, "s_hit" -> LongType) ++ moment2Cols.map(_ -> dec)
 
   /** [[abDashboardKArmFromCells]] with the TWO-COVARIATE variance
     * reduction: the identical SRM → Wilson → mSPRT → BH chain from the
@@ -495,8 +509,7 @@ object AbDashboard {
     val treatments = weights.map(_._1).filterNot(_ == control).sorted
     val spark = cells.sparkSession
     import spark.implicits._
-    val local = materialize(cells)
-    val (full, cum) = spineCum2(local, weights.map(_._1))
+    val (full, cum) = spine(cells, Nil, weights.map(_._1), ab2Measures)
     val cmps = broadcast(treatments.toDF("cmp"))
     val inCmp = col("arm") === col("cmp") || col("arm") === lit(control)
     val (srm, wilArm, wilCtl, adj) = karmStages(full, cum, weights, control,
@@ -605,19 +618,8 @@ object AbDashboard {
     require(arms._1 != arms._2, s"need two distinct arms: $arms")
     val lo = if (arms._1 < arms._2) arms._1 else arms._2
     val hi = if (arms._1 < arms._2) arms._2 else arms._1
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val local = materialize(
-      cells.filter(col("arm") === lo || col("arm") === hi))
-    // (metric × arm × peek) spine over the bounded frame
-    val metrics = local.select(col("metric")).distinct()
-    val peeks = local.select(col("peek")).distinct()
-    val armsDf = Seq(lo, hi).toDF("arm")
-    val full = metrics.crossJoin(peeks).crossJoin(broadcast(armsDf))
-      .join(local, Seq("metric", "arm", "peek"), "left")
-      .select(col("metric"), col("arm"), col("peek"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        coalesce(col("s_hit"), lit(0L)).as("s_hit"))
+    val (full, _) = spine(cells.filter(col("arm") === lo || col("arm") === hi),
+      Seq("metric"), Seq(lo, hi), Seq("n" -> LongType, "s_hit" -> LongType))
     // per-peek increments per metric, lo/hi oriented
     val incr = full.groupBy(col("metric"), col("peek")).agg(
       sum(when(col("arm") === lo, col("n")).otherwise(0L)).as("bn1"),

@@ -88,14 +88,10 @@ object BayesMean {
     // op-for-op — exact BigInt moment sums, correctly-rounded
     // decimal→double casts, [[GroupSequential.phi]] (bitwise-equal to
     // the phiCol dag the oracle renders), the same NULL guards.
-    val rows = cells.filter(col("arm").isin(arms: _*))
+    val rows = BayesAb.collectBounded(cells.filter(col("arm").isin(arms: _*))
       .select(col("arm").cast("string"), col("peek").cast("long"),
-        col("n").cast("long"), col("sy").cast(dec), col("syy").cast(dec))
-      .collect()
-    require(rows.length <= BayesAb.maxDriverCells,
-      s"bayesMeanKArmFromCells: ${rows.length} (arm, peek) cells exceed the " +
-        s"driver-fold bound ${BayesAb.maxDriverCells} — the cell frame must be " +
-        "(arms x peeks)-bounded per the operator contract")
+        col("n").cast("long"), col("sy").cast(dec), col("syy").cast(dec)),
+      BayesAb.maxDriverCells, "bayesMeanKArmFromCells")
     val byCell = rows.map(r => (r.getString(0), r.getLong(1)) ->
       (r.getLong(2), BigInt(r.getDecimal(3).toBigInteger),
         BigInt(r.getDecimal(4).toBigInteger))).toMap

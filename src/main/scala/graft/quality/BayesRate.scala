@@ -82,14 +82,10 @@ object BayesRate {
     // one-partition shape) — pure fixed cost per read. Every landed log,
     // quantized term and ordered cumulative below replicates the
     // replaced Column dag op-for-op, so the oracle hashes unchanged.
-    val rows = cells.filter(col("arm").isin(arms: _*))
+    val rows = BayesAb.collectBounded(cells.filter(col("arm").isin(arms: _*))
       .select(col("arm").cast("string"), col("peek").cast("long"),
-        col("e").cast("long"), col("c").cast("long"))
-      .collect()
-    require(rows.length <= BayesAb.maxDriverCells,
-      s"bayesRateKArmFromCells: ${rows.length} (arm, peek) cells exceed the " +
-        s"driver-fold bound ${BayesAb.maxDriverCells} — the cell frame must be " +
-        "(arms x peeks)-bounded per the operator contract")
+        col("e").cast("long"), col("c").cast("long")),
+      BayesAb.maxDriverCells, "bayesRateKArmFromCells")
     val byCell = rows.map(r => (r.getString(0), r.getLong(1)) ->
       (r.getLong(2), r.getLong(3))).toMap
     require(byCell.size == rows.length,

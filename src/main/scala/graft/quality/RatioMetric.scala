@@ -3,6 +3,7 @@ package graft.quality
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** The ratio-metric A/B read (Deng, Knoblich & Lu 2018, "Applying the
   * Delta Method in Metric Analytics"): the read every experimentation
@@ -39,11 +40,12 @@ import org.apache.spark.sql.functions._
   * mean and var(r̂) to the welchT mean variance — the delta method
   * degrades to the t read exactly, not approximately.
   *
-  * SCALE: the one row-scale pass is the upstream cell aggregation; the
-  * cells localize once ([[AbDashboard.materialize]] — the
-  * eager-execution contract documented there) and everything here runs
-  * on the (arms × peeks)-bounded frame. At 100× data only the upstream
-  * pass grows.
+  * SCALE: the one row-scale pass is the upstream cell aggregation. The
+  * k-arm read collects the (arms × peeks)-bounded cells once and builds
+  * its cumulative state on the driver ([[AbDashboard.spine]] — the
+  * eager-execution contract is documented at [[AbDashboard.materialize]]);
+  * everything after runs on a one-partition local relation. At 100×
+  * data only the upstream pass grows.
   */
 object RatioMetric {
 
@@ -242,7 +244,10 @@ object RatioMetric {
   /** The k-arm delta-method ratio read from a (possibly folded)
     * [[AbDashboard.abCells]] frame (y = numerator, x = denominator).
     * One row per (designed arm ≠ control, peek), cumulative to that
-    * peek.
+    * peek. Cells of arms outside `arms` are ignored; the per-arm running
+    * sums come from the driver-built (arm × peek) spine, where a missing
+    * cell reads as an all-zero one and a duplicate or NULL-peek cell
+    * fails at construction.
     */
   def ratioDeltaKArmFromCells(
       cells: DataFrame,
@@ -252,33 +257,10 @@ object RatioMetric {
     require(arms.distinct.size == arms.size && arms.size >= 2,
       s"need >= 2 distinct designed arms: $arms")
     require(arms.contains(control), s"control '$control' must be in $arms")
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val local = AbDashboard.materialize(
-      cells.filter(col("arm").isin(arms: _*)))
-    val peeks = local.select(col("peek")).distinct()
-    val armsDf = broadcast(arms.toDF("arm"))
     val zero = lit(0L).cast(dec)
-    val full = peeks.crossJoin(armsDf)
-      .join(local.select(col("arm"), col("peek"), col("n"), col("sx"),
-        col("sy"), col("sxx"), col("syy"), col("sxy")),
-        Seq("arm", "peek"), "left")
-      .select(col("arm"), col("peek"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        coalesce(col("sx"), zero).as("sx"),
-        coalesce(col("sy"), zero).as("sy"),
-        coalesce(col("sxx"), zero).as("sxx"),
-        coalesce(col("syy"), zero).as("syy"),
-        coalesce(col("sxy"), zero).as("sxy"))
-    val wCum = Window.partitionBy(col("arm")).orderBy(col("peek"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = full.select(col("arm"), col("peek"),
-      sum("n").over(wCum).as("n"),
-      sum("sx").over(wCum).as("sx"),
-      sum("sy").over(wCum).as("sy"),
-      sum("sxx").over(wCum).as("sxx"),
-      sum("syy").over(wCum).as("syy"),
-      sum("sxy").over(wCum).as("sxy"))
+    val (_, cum) = AbDashboard.spine(cells.filter(col("arm").isin(arms: _*)),
+      Nil, arms, ("n" -> LongType) +:
+        Seq("sx", "sy", "sxx", "syy", "sxy").map(_ -> DecimalType(38, 0)))
     // per-(arm, peek) ratio + delta-method variance: staged projections,
     // every division inside its own ANSI guard
     val nD = col("n").cast(dec)

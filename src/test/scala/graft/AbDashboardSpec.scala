@@ -1,9 +1,9 @@
 package graft
 
-import graft.quality.{AbDashboard, Association, SequentialTests}
+import graft.quality.{AbDashboard, Association, BayesAb, RatioMetric, SequentialTests}
 import graft.queries.CoreQueries
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The composed A/B dashboard's closure invariants: the store state folds
@@ -525,5 +525,104 @@ class AbDashboardSpec extends SparkSpec {
     val sx = a.map(_.getAs[java.math.BigDecimal]("sx").longValueExact()).sum
     val sxx = a.map(_.getAs[java.math.BigDecimal]("sxx").longValueExact()).sum
     assert(BigInt(n) * BigInt(sxx) - BigInt(sx) * BigInt(sx) > 0)
+  }
+
+  test("collectBounded: a frame over the bound fails before its rows reach the driver") {
+    val four = (1 to 4).toDF("v")
+    val e = intercept[IllegalArgumentException](BayesAb.collectBounded(four, 3, "probe"))
+    assert(e.getMessage === "requirement failed: probe: more than 3 rows exceed " +
+      "the driver-fold bound — the frame must stay bounded (arms x peeks, " +
+      "covariate levels x durations) per the operator contract")
+    assert(BayesAb.collectBounded(four, 4, "probe").map(_.getInt(0)).sorted.toSeq ===
+      Seq(1, 2, 3, 4))
+    // materialize lays the collected frame out in one partition
+    assert(AbDashboard.materialize(four.repartition(3)).rdd.getNumPartitions === 1)
+  }
+
+  /** The four driver-spined readers over the same cell frame. */
+  private def spinedReads(cells: DataFrame, cards: DataFrame): Seq[(String, Seq[Row])] = {
+    val design = Seq("A" -> 0.5, "B" -> 0.3, "C" -> 0.2)
+    Seq(
+      "two-arm" -> AbDashboard.abDashboardFromCells(cells,
+        Seq("A" -> 0.5, "B" -> 0.5), tau2 = 0.25).orderBy("peek"),
+      "k-arm" -> AbDashboard.abDashboardKArmFromCells(cells, design, "A",
+        tau2 = 0.25).orderBy("peek", "arm"),
+      "scorecard" -> AbDashboard.scorecardFromCells(cards, ("A", "B"),
+        tau2 = 0.25).orderBy("peek", "metric"),
+      "ratio" -> RatioMetric.ratioDeltaKArmFromCells(cells, Seq("A", "B", "C"), "A")
+        .orderBy("peek", "arm")
+    ).map { case (k, df) => k -> df.collect().toSeq }
+  }
+
+  // three-arm toy cells and two-metric scorecard cells over the same units
+  private def spineFixture: (DataFrame, DataFrame) = {
+    val u = toDf(units(240, 7).map(t => if (t._1 % 5 == 0) t.copy(_2 = "C") else t))
+    (cellsOf(u), AbDashboard.scorecardCells(
+      u.withColumn("mb", col("y") > 3L), "arm", "peek", Seq("hit", "mb")))
+  }
+
+  test("driver spine: a missing cell reads exactly like an explicit all-zero cell") {
+    val (cells, cards) = spineFixture
+    val gone = col("arm") === "B" && col("peek") === 2L
+    val zeroD = lit(0L).cast("decimal(38,0)")
+    def zeroed(df: DataFrame, measures: Seq[String]) =
+      df.select(df.columns.map(c =>
+        if (!measures.contains(c)) col(c)
+        else when(gone, if (c == "n" || c == "s_hit") lit(0L) else zeroD)
+          .otherwise(col(c)).as(c)): _*)
+    val missing = spinedReads(cells.filter(!gone), cards.filter(!gone))
+    val explicit = spinedReads(
+      zeroed(cells, Seq("n", "s_hit", "sx", "sy", "sxx", "syy", "sxy")),
+      zeroed(cards, Seq("n", "s_hit")))
+    for (((k, m), (_, z)) <- missing.zip(explicit)) {
+      assert(m.nonEmpty, k)
+      assert(m === z, k)
+    }
+  }
+
+  test("driver spine: an empty cell frame reads as an empty frame") {
+    val (cells, cards) = spineFixture
+    for ((k, rows) <- spinedReads(cells.filter(lit(false)), cards.filter(lit(false))))
+      assert(rows.isEmpty, k)
+  }
+
+  test("driver spine: duplicate or NULL-keyed cells fail loudly, naming the cell") {
+    val (cells, cards) = spineFixture
+    val design = Seq("A" -> 0.5, "B" -> 0.5)
+    val dup = cells.unionByName(cells.filter(col("arm") === "B" && col("peek") === 1L))
+    val e1 = intercept[IllegalArgumentException](
+      AbDashboard.abDashboardFromCells(dup, design, tau2 = 0.25))
+    assert(e1.getMessage.contains("duplicate cell (arm=B, peek=1)"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      RatioMetric.ratioDeltaKArmFromCells(dup, Seq("A", "B"), "A"))
+    assert(e2.getMessage.contains("duplicate cell (arm=B, peek=1)"), e2.getMessage)
+    val dupCard = cards.unionByName(cards.filter(col("metric") === "mb" &&
+      col("arm") === "A" && col("peek") === 0L))
+    val e3 = intercept[IllegalArgumentException](
+      AbDashboard.scorecardFromCells(dupCard, ("A", "B"), tau2 = 0.25))
+    assert(e3.getMessage.contains("duplicate cell (metric=mb, arm=A, peek=0)"),
+      e3.getMessage)
+    val nullPeek = cells.unionByName(cells.limit(1)
+      .withColumn("peek", lit(null).cast("long")))
+    val e4 = intercept[IllegalArgumentException](
+      AbDashboard.abDashboardKArmFromCells(nullPeek, design, "A", tau2 = 0.25))
+    assert(e4.getMessage.contains("NULL key in cell") &&
+      e4.getMessage.contains("peek=null"), e4.getMessage)
+  }
+
+  test("the store dashboard read: one construction job (the bounded collect), a fixed job budget") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-abjobs").toString
+    cellsOf(toDf(units(150, 3))).coalesce(1).write.parquet(s"$tmp/v=0")
+    val store = spark.read.parquet(s"$tmp/v=0")
+    val design = Seq("A" -> 0.5, "B" -> 0.5)
+    // warm: the first read of a session pays one-time planning work
+    AbDashboard.abDashboardFromCells(store, design, tau2 = 0.25).collect()
+    val (dash, built) = JobCount(spark)(
+      AbDashboard.abDashboardFromCells(store, design, tau2 = 0.25))
+    assert(built === 1, "construction runs exactly the bounded collect")
+    val (rows, read) = JobCount(spark)(dash.collect())
+    assert(rows.length === 4)
+    // measured: 6 jobs over the driver-built one-partition spine
+    assert(read <= 6, s"the read ran $read jobs")
   }
 }

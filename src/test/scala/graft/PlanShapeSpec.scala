@@ -807,16 +807,16 @@ class PlanShapeSpec extends SparkSpec {
     Shape("q325_icc_deff", maxHash = 2, maxRange = 2,
       forbidSortMergeJoin = true, forbidUdf = true),
     // composed A/B dashboard: the row-scale per-user + cell aggs execute
-    // ONCE (the cell state is materialized as a local relation before the
-    // stage fan-out — the bounded driver fold, arm × peek cardinality);
-    // all remaining exchanges move the ≤ (arms × peeks)-row cell frame
-    // through the four stage reads and the peek joins
-    Shape("q326_ab_dashboard", maxHash = 20, maxRange = 8, forbidUdf = true,
+    // ONCE, in the bounded collect at construction; the spine and the
+    // cumulative state are one-partition local relations built on the
+    // driver, so the four stage reads and the peek joins need no
+    // exchange but the one after SRM's full outer join
+    Shape("q326_ab_dashboard", maxHash = 1, maxRange = 8, forbidUdf = true,
       maxParquetScans = 0),
     // from-store twin: the three batch arms' per-user + cell aggs + the
-    // merge land in the SAME one-time materialization; the dashboard
-    // stages downstream are identical
-    Shape("q327_ab_dashboard_from_store", maxHash = 24, maxRange = 8,
+    // merge land in the SAME one-time collect; the dashboard stages
+    // downstream are identical
+    Shape("q327_ab_dashboard_from_store", maxHash = 1, maxRange = 8,
       forbidUdf = true),
     // power panels: the per-user + cell aggs, one roll-up, the 2-label
     // pivot — fixed dags after, nothing row-scale twice
@@ -879,23 +879,23 @@ class PlanShapeSpec extends SparkSpec {
       maxParquetScans = 0),
     Shape("q344_drift_card_from_store", maxHash = 0, maxRange = 2,
       forbidUdf = true, maxParquetScans = 0),
-    // k-arm dashboard: every stage over the (arm x peek) local cell
-    // frame, per-comparison fan-out included; one row-scale pass at
-    // construction, none in the read
-    Shape("q345_ab_dashboard_karm", maxHash = 26, maxRange = 4,
+    // k-arm dashboard: every stage over the driver-built one-partition
+    // (arm x peek) spine, per-comparison fan-out included; one row-scale
+    // pass at construction, none in the read, one exchange (SRM's)
+    Shape("q345_ab_dashboard_karm", maxHash = 1, maxRange = 4,
       minBroadcastJoin = 4, forbidUdf = true, maxParquetScans = 0),
-    // multi-metric scorecard: monitor + BH over the (metric x arm x
-    // peek) local cell frame
-    Shape("q346_scorecard", maxHash = 5, maxRange = 2, forbidUdf = true,
+    // multi-metric scorecard: monitor + BH over the one-partition
+    // (metric x arm x peek) driver spine — zero exchanges
+    Shape("q346_scorecard", maxHash = 0, maxRange = 2, forbidUdf = true,
       maxParquetScans = 0),
     // vector CUPED: ONE row-scale moments agg + the 2-label pivot
     Shape("q347_cuped_multi", maxHash = 4, maxRange = 2,
       forbidSortMergeJoin = true, forbidUdf = true, maxParquetScans = 1),
     // from-store twins: the three batch folds run at construction; the
     // read plans stay zero-row-scale like their direct arms
-    Shape("q348_scorecard_from_store", maxHash = 5, maxRange = 2,
+    Shape("q348_scorecard_from_store", maxHash = 0, maxRange = 2,
       forbidUdf = true, maxParquetScans = 0),
-    Shape("q349_ab_karm_from_store", maxHash = 26, maxRange = 4,
+    Shape("q349_ab_karm_from_store", maxHash = 1, maxRange = 4,
       minBroadcastJoin = 4, forbidUdf = true, maxParquetScans = 0),
     // QTE: the q267 shape — one rank window per arm + the group-keyed join
     Shape("q350_qte", maxHash = 4, forbidUdf = true),
@@ -942,7 +942,7 @@ class PlanShapeSpec extends SparkSpec {
       forbidUdf = true),
     // vector-CUPED k-arm: the q345 lock shape (same shared stages, the
     // two-covariate Cramer stage adds projections, not exchanges)
-    Shape("q364_ab_karm_cuped2", maxHash = 26, maxRange = 4,
+    Shape("q364_ab_karm_cuped2", maxHash = 1, maxRange = 4,
       minBroadcastJoin = 4, forbidUdf = true, maxParquetScans = 0),
     // heterogeneity card: one moments agg, segment-bounded meta windows,
     // one broadcast join back
@@ -958,10 +958,11 @@ class PlanShapeSpec extends SparkSpec {
       maxParquetScans = 0),
     Shape("q368_bayes_mean_from_store", maxHash = 6, maxRange = 2,
       forbidUdf = true, maxParquetScans = 0),
-    // ratio delta read: same localized-cells shape as q367
-    Shape("q369_ratio_delta", maxHash = 6, maxRange = 2, forbidUdf = true,
+    // ratio delta read: the cumulative state is a driver-built
+    // one-partition local relation — zero exchanges
+    Shape("q369_ratio_delta", maxHash = 0, maxRange = 2, forbidUdf = true,
       maxParquetScans = 0),
-    Shape("q370_ratio_delta_from_store", maxHash = 6, maxRange = 2,
+    Shape("q370_ratio_delta_from_store", maxHash = 0, maxRange = 2,
       forbidUdf = true, maxParquetScans = 0),
     // two-covariate Cox: the q361 lock shape — wider pass columns, same
     // exchange structure
