@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair/edge list — the step that turns
@@ -45,15 +45,42 @@ object ConnectedComponents {
       case _ => ()
     }
 
+  /** The shared driver-solve bound: an edge set of at most this many
+    * rows is solved on the driver instead of by an iterative chain of
+    * Spark jobs. Every driver twin in graft — [[labelPropagation]], the
+    * threshold sweep, the incremental fold and
+    * [[graft.graph.PageRank]]'s walk — uses this one bound and reads its
+    * edges through [[collectLocal]]. 2^20 (src, dst) rows are on the
+    * order of 100 MB as driver Row objects; below that size the per-round
+    * scheduling latency of the distributed loop, not the edge work, is
+    * the cost.
+    */
+  private[graft] val LocalEdgeBound: Int = 1 << 20
+
+  /** The one bounded collect behind every driver twin: the rows of `df`,
+    * or None when `max` is not positive, the frame holds more than `max`
+    * rows, or any value is NULL — the caller then falls back to its
+    * distributed loop, which owns the semantics (NULL join keys are
+    * tolerated there). `limit(max + 1)` bounds the collect BEFORE the rows
+    * reach the driver: CollectLimit stops after the first partitions when
+    * the frame is huge.
+    */
+  private[graft] def collectLocal(df: DataFrame, max: Int): Option[Array[Row]] = {
+    if (max <= 0) return None
+    val rows = df.limit(max + 1).collect()
+    if (rows.length > max || rows.exists(_.anyNull)) None
+    else Some(rows)
+  }
+
   /** @param edges DataFrame with columns (src, dst) — undirected.
     * @param localEdgeThreshold edge sets at most this large are solved by
     *        ONE driver union-find instead of the iterative distributed
-    *        propagation (0 disables). Near-dup edge sets are tiny relative
-    *        to the corpus they came from — blocking emits pairs, not rows —
-    *        so at micro-batch and per-query scale the O(log diameter)
-    *        round chain is pure scheduling latency; the probe pays one
-    *        incremental `limit(n+1).collect()` (CollectLimit stops after
-    *        the first partitions when the set is huge) and falls back.
+    *        propagation (0 disables; default [[LocalEdgeBound]]). Near-dup
+    *        edge sets are tiny relative to the corpus they came from —
+    *        blocking emits pairs, not rows — so at micro-batch and
+    *        per-query scale the O(log diameter) round chain is pure
+    *        scheduling latency; the probe pays one [[collectLocal]] and
+    *        falls back when the set is over the bound.
     * @return (node, component) where component = min node id reachable.
     *         Distributed results are materialized (checkpointed); local
     *         ones are a LocalRelation — deterministic and free to branch.
@@ -61,7 +88,7 @@ object ConnectedComponents {
   def labelPropagation(
       edges: DataFrame,
       maxIter: Int = 20,
-      localEdgeThreshold: Int = 1 << 20
+      localEdgeThreshold: Int = LocalEdgeBound
   ): DataFrame =
     localLabelPropagation(edges, localEdgeThreshold)
       .getOrElse(distributedLabelPropagation(edges, maxIter))
@@ -79,13 +106,13 @@ object ConnectedComponents {
     val longIds = Seq(edges.schema.fields.find(_.name == "src"),
         edges.schema.fields.find(_.name == "dst"))
       .forall(_.exists(_.dataType == LongType))
-    if (localEdgeThreshold <= 0 || !longIds) return None
+    if (!longIds) return None
     val spark = edges.sparkSession
     import spark.implicits._
-    val rows = edges.select(col("src"), col("dst"))
-      .limit(localEdgeThreshold + 1).collect()
-    if (rows.length > localEdgeThreshold) return None
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val rows = collectLocal(edges.select(col("src"), col("dst")), localEdgeThreshold) match {
+      case Some(r) => r
+      case None => return None
+    }
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -224,7 +251,7 @@ object ConnectedComponents {
       dstCol: String,
       distCol: String,
       thresholds: Seq[Int],
-      localPairThreshold: Int = 1 << 20
+      localPairThreshold: Int = LocalEdgeBound
   ): DataFrame = {
     require(thresholds.nonEmpty, "need at least one threshold")
     val grouped = pairs
@@ -248,11 +275,13 @@ object ConnectedComponents {
     val longIds = Seq(grouped.schema.fields.find(_.name == "src"),
         grouped.schema.fields.find(_.name == "dst"))
       .forall(_.exists(_.dataType == LongType))
-    if (localPairThreshold <= 0 || !longIds) return None
+    if (!longIds) return None
     val spark = grouped.sparkSession
     import spark.implicits._
-    val rows = grouped.limit(localPairThreshold + 1).collect()
-    if (rows.length > localPairThreshold) return None
+    val rows = collectLocal(grouped, localPairThreshold) match {
+      case Some(r) => r
+      case None => return None
+    }
     val edges = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(e => (e._3, e._1, e._2))
     // incremental union-find with running node/component counters
@@ -289,16 +318,32 @@ object ConnectedComponents {
       .toDF("threshold", "n_pairs", "n_nodes", "n_clusters", "dup_factor"))
   }
 
+  /** Prefix of the job tag each threshold of [[distributedThresholdSweep]]
+    * runs under (`<prefix>-<sweep uuid>-<threshold index>`).
+    */
+  private[graft] val SweepJobTagPrefix = "graft-threshold-sweep"
+
   /** Per-threshold fallback for pair sets too large to collect: one
     * [[labelPropagation]] per threshold, all over the ONE checkpointed
     * min-dist frame (summaries are collected eagerly — threshold-count
     * rows — so the checkpoint can be freed before returning).
+    *
+    * @param timeout bound on the whole sweep. When it passes, every
+    *        threshold's jobs are cancelled through its job tag and the
+    *        workers are drained BEFORE the TimeoutException propagates —
+    *        no sweep job keeps running in the background, and none reads
+    *        the checkpoint after it is freed.
     */
-  private def distributedThresholdSweep(
+  private[graft] def distributedThresholdSweep(
       grouped: DataFrame,
-      thresholds: Seq[Int]
+      thresholds: Seq[Int],
+      timeout: scala.concurrent.duration.FiniteDuration =
+        scala.concurrent.duration.Duration(1, "h")
   ): DataFrame = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
     val spark = grouped.sparkSession
+    val sc = spark.sparkContext
     import spark.implicits._
     val ckpt = grouped.localCheckpoint()
     try {
@@ -307,30 +352,47 @@ object ConnectedComponents {
       // threshold's label-propagation tail back-fills idle executors
       // (guide §2.6); results are collected per threshold and re-emitted
       // in caller order, so the overlap changes nothing downstream
+      val sweepId = java.util.UUID.randomUUID()
+      val tags = thresholds.indices.map(i => s"$SweepJobTagPrefix-$sweepId-$i")
+      val stopped = new java.util.concurrent.atomic.AtomicBoolean(false)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(4, thresholds.size))
       val out =
         try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val futs = thresholds.map { t =>
-            scala.concurrent.Future {
-              val e = ckpt.filter(col("d") <= t.toDouble).select(col("src"), col("dst"))
-              val s = clusters(e)
-                .agg(
-                  coalesce(sum("n_members"), lit(0L)).as("n_nodes"),
-                  count(lit(1)).as("n_clusters"))
-                .collect()(0)
-              val nPairs = ckpt.filter(col("d") <= t.toDouble).count()
-              val (nNodes, nClusters) = (s.getLong(0), s.getLong(1))
-              val dup = if (nNodes > 0L) (nNodes - nClusters).toDouble / nNodes.toDouble else 0d
-              (t, nPairs, nNodes, nClusters, dup)
+          implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+          val futs = thresholds.zip(tags).map { case (t, tag) =>
+            Future {
+              if (stopped.get)
+                throw new java.util.concurrent.CancellationException(
+                  s"threshold sweep stopped before threshold $t")
+              sc.addJobTag(tag)
+              try {
+                val e = ckpt.filter(col("d") <= t.toDouble).select(col("src"), col("dst"))
+                val s = clusters(e)
+                  .agg(
+                    coalesce(sum("n_members"), lit(0L)).as("n_nodes"),
+                    count(lit(1)).as("n_clusters"))
+                  .collect()(0)
+                val nPairs = ckpt.filter(col("d") <= t.toDouble).count()
+                val (nNodes, nClusters) = (s.getLong(0), s.getLong(1))
+                val dup = if (nNodes > 0L) (nNodes - nClusters).toDouble / nNodes.toDouble else 0d
+                (t, nPairs, nNodes, nClusters, dup)
+              } finally sc.removeJobTag(tag)
             }
           }
-          // a bounded wait so a wedged job cannot block the sweep forever;
-          // any failure/timeout propagates after the finally reclaims the pool
-          futs.map(f => scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration(1, "h")))
+          val deadline = timeout.fromNow
+          try futs.map(f => Await.result(f, deadline.timeLeft max Duration.Zero))
+          catch {
+            case e: java.util.concurrent.TimeoutException =>
+              // cancel until every worker has returned: a worker between
+              // two actions would otherwise start its next job after the
+              // first cancel, and queued thresholds see `stopped` and skip
+              stopped.set(true)
+              pool.shutdown()
+              do tags.foreach(sc.cancelJobsWithTag(_, s"threshold sweep timed out after $timeout"))
+              while (!pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS))
+              throw e
+          }
         } finally pool.shutdown()
       out.toDF("threshold", "n_pairs", "n_nodes", "n_clusters", "dup_factor")
     } finally freeLocalCheckpoint(ckpt)
@@ -384,7 +446,7 @@ object ConnectedComponents {
       newEdges: DataFrame,
       maxIter: Int = 20,
       broadcastBatch: Boolean = true,
-      maxLocalEdges: Int = 1 << 20
+      maxLocalEdges: Int = LocalEdgeBound
   ): (DataFrame, DataFrame) =
     localResolve(assign, newEdges, broadcastBatch, maxLocalEdges)
       .getOrElse(distributedResolve(assign, newEdges, maxIter, broadcastBatch))
@@ -420,14 +482,10 @@ object ConnectedComponents {
     if (!broadcastBatch || !longIds) return None
     val spark = assign.sparkSession
     import spark.implicits._
-    val rows = newEdges.select(col("src"), col("dst"))
-      .limit(maxLocalEdges + 1).collect()
-    // NULL endpoints: bail to the distributed path (same guard as
-    // localLabelPropagation — null join keys are tolerated there, while
-    // getLong on a null primitive would NPE here)
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val pairs = rows.map(r => (r.getLong(0), r.getLong(1)))
-    if (pairs.length > maxLocalEdges) return None
+    val pairs = collectLocal(newEdges.select(col("src"), col("dst")), maxLocalEdges) match {
+      case Some(rows) => rows.map(r => (r.getLong(0), r.getLong(1)))
+      case None => return None
+    }
     val endpoints = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
     // old component per batch endpoint — the ONLY assignment rows read
     // eagerly, bounded by 2·|batch|

@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.ConnectedComponents
 import graft.plans.Lineage
 
 /** Deterministic PageRank (Brin & Page 1998) in exact integer
@@ -24,13 +25,27 @@ import graft.plans.Lineage
   * of absolute rank, noise for ranking purposes but EXACTLY the same
   * noise on every engine.
   *
-  * Scale shape: each iteration is one shuffle-join of the rank frame
-  * (N rows) with the edge frame (E rows) on `src` plus one aggregation
-  * on `dst` — O(E) exchanged per iteration, the textbook distributed
-  * formulation. Degrees are precomputed once. The edge frame is reused
-  * every iteration, so callers at 100 TB should cache/bucket it by
-  * `src` (one co-partitioned layout serves all iterations); the rank
-  * frame is N rows, never wider than (node, long).
+  * Scale shape: two loops compute the same recurrence.
+  *  - The DRIVER TWIN runs whenever the distinct edge set fits the
+  *    shared driver bound (`ConnectedComponents.LocalEdgeBound`, 2^20
+  *    edges — the bound `labelPropagation` uses). One bounded collect
+  *    of the distinct (src, dst) pairs (and one of the seeds) maps the
+  *    nodes to dense array indices, the walk runs over arrays on the
+  *    driver, and the result is a LocalRelation. Because integer sums
+  *    are associative it is bit-identical to the distributed loop by
+  *    construction — for graphs this size the distributed loop is all
+  *    per-stage scheduling latency (McSherry et al., "Scalability! But
+  *    at what COST?", HotOS 2015).
+  *  - The DISTRIBUTED LOOP owns the semantics and takes every case the
+  *    twin declines: an edge set over the bound, a NULL endpoint or
+  *    seed, an id type other than LONG, INT or default-collation STRING
+  *    (src and dst must agree), or a seed type that differs from the
+  *    node type. Each iteration is one shuffle-join of the rank frame
+  *    (N rows) with the edge frame (E rows) on `src` plus one
+  *    aggregation on `dst` — O(E) exchanged per iteration, the textbook
+  *    distributed formulation. Degrees are precomputed once and the edge
+  *    frame is laid out by `src` once, so every iteration shuffles only
+  *    the node-sized rank frame.
   *
   * Dangling nodes (no out-edges) keep their damped base share and
   * simply do not redistribute — the "drop dangling mass" variant;
@@ -48,6 +63,13 @@ object PageRank {
     * N·scale; callers with N·scale ≥ 2^62/100 must lower `scale`
     * (fail-fast is on the multiply below via Spark's ANSI-off wrap —
     * so the bound is asserted here instead).
+    *
+    * Action contract: a walk solved on the driver returns a
+    * LocalRelation — safe to act on, or branch from, any number of
+    * times. A distributed walk returns a LAZY iters-deep join chain over
+    * its cached edge and node frames: act on it ONCE (or persist /
+    * `Lineage.truncate` it first), or every further action re-runs the
+    * whole walk.
     */
   def ranks(
       edges: DataFrame,
@@ -66,7 +88,9 @@ object PageRank {
     * start at `scale` and keep the damped base share, non-seeds start
     * at 0 and receive only in-flowing mass — every iteration
     * bit-identical under any partitioning, q165 replays all of them.
-    * With seeds = the whole node set this IS [[ranks]] (same loop).
+    * With seeds = the whole node set this IS [[ranks]] (same loop), and
+    * the result carries the same action contract: act once on a
+    * distributed walk, any number of times on a driver-solved one.
     */
   def personalizedRanks(
       edges: DataFrame,
@@ -78,17 +102,136 @@ object PageRank {
   ): DataFrame =
     rankLoop(edges, Some(seeds), iters, scale, dampNum, dampDen)
 
-  private def rankLoop(
+  /** The walk behind [[ranks]], [[personalizedRanks]] and
+    * [[hostAuthority]]: the driver twin when the edge set fits
+    * `localEdgeBound` (0 forces the distributed loop), else the
+    * distributed loop.
+    */
+  private[graft] def rankLoop(
       edges: DataFrame,
       seedsOpt: Option[DataFrame],
       iters: Int,
       scale: Long,
       dampNum: Long,
-      dampDen: Long
+      dampDen: Long,
+      localEdgeBound: Int = ConnectedComponents.LocalEdgeBound
   ): DataFrame = {
     require(iters >= 0 && iters <= 50, s"iters out of range: $iters")
     require(scale > 0 && dampNum > 0 && dampDen >= dampNum,
       s"bad damping/scale: $dampNum/$dampDen @ $scale")
+    // node ids keep the CALLER's type (a long id shuffles/compares far
+    // cheaper than its string form)
+    val e0 = edges.select(col("src"), col("dst")).distinct()
+    if (localEdgeBound <= 0 || !driverTypes(e0, seedsOpt))
+      return distributedRankLoop(e0, seedsOpt, iters, scale, dampNum, dampDen, sharedEdges = false)
+    // the twin's bounded collect and the fallback read ONE lazy checkpoint
+    // of the distinct edge set: its shuffle runs once, the partitions the
+    // collect computed are kept, and a walk over the bound does not re-run
+    // the scan + distinct its collect attempt already paid for. (A
+    // persist() in its place measured a 2x slower walk phase on the
+    // fallback at sf0.1, 4 cores; the checkpoint keeps the plan's own
+    // statistics.)
+    val shared = e0.localCheckpoint(eager = false)
+    localRankLoop(shared, seedsOpt, iters, scale, dampNum, dampDen, localEdgeBound) match {
+      case Some(local) => ConnectedComponents.freeLocalCheckpoint(shared); local
+      case None =>
+        distributedRankLoop(shared, seedsOpt, iters, scale, dampNum, dampDen, sharedEdges = true)
+    }
+  }
+
+  /** The id types the driver twin walks: LONG, INT or default-collation
+    * STRING (the driver compares strings byte-for-byte, a collated Spark
+    * column may not), the same for src, dst and the seeds' `node`.
+    */
+  private def driverTypes(e0: DataFrame, seedsOpt: Option[DataFrame]): Boolean = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val Array(srcField, dstField) = e0.schema.fields
+    val t = srcField.dataType
+    (t == LongType || t == IntegerType || t == StringType) && dstField.dataType == t &&
+      seedsOpt.forall(_.schema.fields.exists(f => f.name == "node" && f.dataType == t))
+  }
+
+  // total rank mass is bounded by N·scale (damping only shrinks it); the
+  // per-edge product multiplies by dampNum before dividing, so
+  // N·scale·dampNum must fit a long or contributions wrap silently under
+  // ANSI-off arithmetic — fail fast instead (the docstring's promised bound)
+  private def requireNoOverflow(nNodes: Long, scale: Long, dampNum: Long): Unit =
+    require(nNodes <= Long.MaxValue / dampNum / scale,
+      s"N·scale·dampNum overflows long (N=$nNodes, scale=$scale): lower scale")
+
+  /** Driver twin of [[distributedRankLoop]] over the distinct edge set
+    * `e0` (id types already checked by [[driverTypes]]): the same
+    * recurrence over dense node indices, in the same truncating Long
+    * arithmetic. None (fall back) when the edges or the seeds are over
+    * the bound or hold a NULL.
+    */
+  private def localRankLoop(
+      e0: DataFrame,
+      seedsOpt: Option[DataFrame],
+      iters: Int,
+      scale: Long,
+      dampNum: Long,
+      dampDen: Long,
+      localEdgeBound: Int
+  ): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val Array(srcField, dstField) = e0.schema.fields
+    val rows = ConnectedComponents.collectLocal(e0, localEdgeBound) match {
+      case Some(r) => r
+      case None => return None
+    }
+    val seedSet = seedsOpt match {
+      case None => None
+      case Some(s) =>
+        ConnectedComponents.collectLocal(s.select(col("node")).distinct(), localEdgeBound) match {
+          case Some(seedRows) => Some(seedRows.map(_.get(0)).toSet[Any])
+          case None => return None
+        }
+    }
+    // dense node indices in first-seen order; ids(i) is node i's value
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def indexOf(v: Any): Int = index.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+    val src = rows.map(r => indexOf(r.get(0)))
+    val dst = rows.map(r => indexOf(r.get(1)))
+    val n = ids.length
+    requireNoOverflow(n, scale, dampNum)
+    val outdeg = new Array[Long](n)
+    src.foreach(i => outdeg(i) += 1)
+    val isSeed = Array.tabulate(n)(i => seedSet.forall(_.contains(ids(i))))
+    val base = (scale * (dampDen - dampNum)) / dampDen
+    var rank = Array.tabulate(n)(i => if (isSeed(i)) scale else 0L)
+    for (_ <- 0 until iters) {
+      val next = Array.tabulate(n)(i => if (isSeed(i)) base else 0L)
+      var k = 0
+      while (k < src.length) {
+        val s = src(k)
+        next(dst(k)) += (rank(s) * dampNum) / (dampDen * outdeg(s))
+        k += 1
+      }
+      rank = next
+    }
+    val schema = StructType(Seq(
+      StructField("node", srcField.dataType, srcField.nullable || dstField.nullable),
+      StructField("r", LongType, nullable = false)))
+    val out = new java.util.ArrayList[Row](n)
+    (0 until n).foreach(i => out.add(Row(ids(i), rank(i))))
+    Some(e0.sparkSession.createDataFrame(out, schema))
+  }
+
+  /** The distributed loop over the distinct edge set `e0`; with
+    * `sharedEdges` (`e0` is the twin's lazy checkpoint) it frees `e0`'s
+    * blocks once the edge checkpoint below no longer needs them.
+    */
+  private def distributedRankLoop(
+      e0: DataFrame,
+      seedsOpt: Option[DataFrame],
+      iters: Int,
+      scale: Long,
+      dampNum: Long,
+      dampDen: Long,
+      sharedEdges: Boolean
+  ): DataFrame = {
     // Iterative-plan discipline (measured at sf0.1, AbGraph):
     // 1. WITHOUT materialization, iteration i's lazy plan contains
     //    iterations 1..i−1 — O(iters²) recompute.
@@ -104,11 +247,8 @@ object PageRank {
     // (possibly expensive) edge-generation lineage once, and it only
     // ever sits on the probe side.
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // node ids keep the CALLER's type (a long id shuffles/compares far
-    // cheaper than its string form), and the out-degree fuses into the
-    // edge frame ONCE — each iteration is then a single rank join + one
-    // aggregation over (dst, contribution)
-    val e0 = edges.select(col("src"), col("dst")).distinct()
+    // the out-degree fuses into the edge frame ONCE — each iteration is
+    // then a single rank join + one aggregation over (dst, contribution)
     val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // Lay the fused edge/outdeg frame out by src ONCE — hash-partitioned
     // AND sorted within partitions — before the checkpoint (r18):
@@ -124,6 +264,7 @@ object PageRank {
       .repartition(col("src"))
       .sortWithinPartitions("src")
       .localCheckpoint()
+    if (sharedEdges) ConnectedComponents.freeLocalCheckpoint(e0)
     val nodesBase = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // __seed marks teleport targets: everyone for plain PageRank, the
@@ -135,14 +276,9 @@ object PageRank {
           Seq("node"), "left")
         .withColumn("__seed", col("__s").isNotNull).drop("__s")
     }).persist(mad)
-    val nNodes = nodes.count() // materialize -> accurate stats for the joins below
-    // total rank mass is bounded by N·scale (damping only shrinks it);
-    // the per-edge product multiplies by dampNum before dividing, so
-    // N·scale·dampNum must fit a long or contributions wrap silently
-    // under ANSI-off arithmetic — fail fast instead (the docstring's
-    // promised bound, checked with the N the materialization just paid for)
-    require(nNodes <= Long.MaxValue / dampNum / scale,
-      s"N·scale·dampNum overflows long (N=$nNodes, scale=$scale): lower scale")
+    // materialize -> accurate stats for the joins below, and the N the
+    // overflow guard needs
+    requireNoOverflow(nodes.count(), scale, dampNum)
     val base = (scale * (dampDen - dampNum)) / dampDen
     // The iteration chain composes LAZILY (r18; replaces persist+count
     // per round): rank_i is referenced exactly once (by contribs_{i+1}),
@@ -180,10 +316,13 @@ object PageRank {
     * the undirected-authority variant curation funnels use when crawl
     * link direction is noisy).
     */
-  def hostAuthority(links: DataFrame, iters: Int = 5, scale: Long = DefaultScale): DataFrame = {
+  def hostAuthority(links: DataFrame, iters: Int = 5, scale: Long = DefaultScale): DataFrame =
+    ranks(symmetrized(links), iters, scale)
+
+  /** (src, dst) ∪ (dst, src): the link graph [[hostAuthority]] ranks. */
+  private[graft] def symmetrized(links: DataFrame): DataFrame = {
     val e = links.select(col("src"), col("dst"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    ranks(sym, iters, scale)
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 }
 
@@ -440,7 +579,7 @@ object Harmonic {
   private val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** Symmetrized distinct edge set, self-loops dropped. */
-  private def sym(edges: DataFrame): DataFrame = {
+  private[graft] def sym(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
     e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
   }
@@ -507,6 +646,9 @@ object Harmonic {
       else { layers = layers :+ fresh; frontier = fresh }
       depth += 1
     }
+    // every layer is materialized, so the result never reads the edge
+    // cache again: release its O(E) blocks now
+    e.unpersist(false)
     layers.map(_.filter(col("d") > 0)).reduce(_ unionByName _)
       .groupBy(col("node"))
       .agg(

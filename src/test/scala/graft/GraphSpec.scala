@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.graph.PageRank
 
@@ -141,5 +143,99 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(ranks("a") == 150000L)
     assert(ranks("b") == 150000L + 127500L)
+  }
+
+  // --- driver twin vs distributed loop ------------------------------------
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  /** The three entry points, each as (driver twin, distributed loop). */
+  private def walks(e: DataFrame, seeds: DataFrame, iters: Int): Seq[(String, DataFrame, DataFrame)] = {
+    import PageRank.{DefaultScale => sc}
+    Seq(
+      ("ranks", PageRank.ranks(e, iters),
+        PageRank.rankLoop(e, None, iters, sc, 85L, 100L, localEdgeBound = 0)),
+      ("personalizedRanks", PageRank.personalizedRanks(e, seeds, iters),
+        PageRank.rankLoop(e, Some(seeds), iters, sc, 85L, 100L, localEdgeBound = 0)),
+      ("hostAuthority", PageRank.hostAuthority(e, iters),
+        PageRank.rankLoop(PageRank.symmetrized(e), None, iters, sc, 85L, 100L, localEdgeBound = 0)))
+  }
+
+  private def assertSameWalk(what: String, local: DataFrame, dist: DataFrame): Unit = {
+    assert(local.schema == dist.schema, what)
+    val (l, d) = (local.collect().toSeq, dist.collect().toSeq)
+    assert(l.size == d.size && l.toSet == d.toSet, what)
+  }
+
+  test("driver walk == distributed loop bit-for-bit: all entry points, long and string ids") {
+    // duplicate edges (1->2 twice), a self-loop (3->3), a dangling node (5:
+    // in-edges only), a second component (7<->8) and a seed (99) that is
+    // not in the graph
+    val longEdges = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (3L, 1L), (1L, 4L),
+      (4L, 5L), (6L, 1L), (7L, 8L), (8L, 7L)).toDF("src", "dst")
+    val longSeeds = Seq(1L, 7L, 99L).toDF("node")
+    val strEdges = longEdges.select(concat(lit("n"), $"src").as("src"),
+      concat(lit("n"), $"dst").as("dst"))
+    val strSeeds = longSeeds.select(concat(lit("n"), $"node").as("node"))
+    for {
+      (ids, e, seeds) <- Seq(("long", longEdges, longSeeds), ("string", strEdges, strSeeds))
+      iters <- Seq(0, 7)
+      (entry, local, dist) <- walks(e, seeds, iters)
+    } {
+      val what = s"$entry $ids ids, $iters iters"
+      assert(isLocal(local) && !isLocal(dist), what)
+      assertSameWalk(what, local, dist)
+    }
+  }
+
+  test("driver walk falls back to the distributed loop: over the bound, NULL endpoint, DOUBLE ids, seed type") {
+    import PageRank.{DefaultScale => sc}
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L)).toDF("src", "dst")
+    // over the bound: 4 distinct edges, bound 3
+    val over = PageRank.rankLoop(e, None, 5, sc, 85L, 100L, localEdgeBound = 3)
+    assert(!isLocal(over))
+    assertSameWalk("over bound", PageRank.ranks(e, 5), over)
+    // a NULL endpoint, a DOUBLE id column and a seed type that differs from
+    // the node type each decline the twin and return the distributed result
+    val withNull = Seq(("a", "b"), ("b", "a"), ("a", null)).toDF("src", "dst")
+    val dbl = e.select($"src".cast("double").as("src"), $"dst".cast("double").as("dst"))
+    val intSeeds = Seq(1).toDF("node")
+    for ((what, got, dist) <- Seq(
+      ("NULL endpoint", PageRank.ranks(withNull, 5),
+        PageRank.rankLoop(withNull, None, 5, sc, 85L, 100L, localEdgeBound = 0)),
+      ("DOUBLE ids", PageRank.ranks(dbl, 5),
+        PageRank.rankLoop(dbl, None, 5, sc, 85L, 100L, localEdgeBound = 0)),
+      ("INT seeds on LONG nodes", PageRank.personalizedRanks(e, intSeeds, 5),
+        PageRank.rankLoop(e, Some(intSeeds), 5, sc, 85L, 100L, localEdgeBound = 0)))) {
+      assert(!isLocal(got), what)
+      assertSameWalk(what, got, dist)
+    }
+    // the NULL node is ranked like any other node: the damped base only
+    val nullRank = PageRank.ranks(withNull, 5).filter($"node".isNull).collect()
+    assert(nullRank.map(_.getLong(1)).toSeq == Seq(150000L))
+    // the recurrence does not depend on the id type
+    val asLong = PageRank.ranks(e, 5).collect().map(r => r.getLong(0).toDouble -> r.getLong(1)).toMap
+    assert(PageRank.ranks(dbl, 5).collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap == asLong)
+  }
+
+  test("hostAuthority on the driver: at most 3 jobs to build and collect, no cached RDD left behind") {
+    val links = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (rows, jobs) = JobCount(spark)(PageRank.hostAuthority(links, iters = 5).collect())
+    assert(rows.length == 4)
+    info(s"$jobs Spark jobs")
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("harmonic releases its edge cache once the BFS layers are materialized") {
+    import graft.graph.Harmonic
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val got = Harmonic.sampledHarmonic(edges, Seq(1L).toDF("node"), maxDepth = 3)
+    assert(got.collect().length == 3)
+    assert(Harmonic.sym(edges).storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
   }
 }

@@ -4,6 +4,7 @@ import graft.graph.Triangles
 import graft.operators.{Sampling, TimeSeries}
 import graft.quality.Association
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Goldens + arm/parity invariants for the trend/rank-test family the
   * round-10 snapshot shipped unpinned (q214–q219) and the round-11
@@ -551,6 +552,47 @@ class TrendStatsSpec extends SparkSpec {
     assert(shuffled.map(_.getAs[Int]("threshold")).toSeq === Seq(5, 0, 7, 2))
     assert(rows(ConnectedComponents.thresholdClusterSweep(
       pairs, "id_a", "id_b", "dist", Seq(5, 0, 7, 2))) === fast)
+  }
+
+  test("distributed threshold sweep: a timeout cancels the tagged jobs before it propagates") {
+    import graft.dedup.ConnectedComponents
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val rnd = new scala.util.Random(4411)
+    val grouped = (1 to 400).map { _ =>
+      (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong, rnd.nextInt(8).toDouble)
+    }.toDF("src", "dst", "d").dropDuplicates("src", "dst")
+    val sc = spark.sparkContext
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains(ConnectedComponents.SweepJobTagPrefix))) started.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      intercept[java.util.concurrent.TimeoutException] {
+        ConnectedComponents.distributedThresholdSweep(grouped, 0 to 7,
+          timeout = scala.concurrent.duration.Duration(1, "ms"))
+      }
+      // a cancelled job's JobEnd is posted just after its caller wakes, so
+      // give the listener bus a moment before reading what is still active
+      def active = {
+        org.apache.spark.ListenerBusDrain(sc)
+        started.asScala.toSet -- ended.asScala
+      }
+      val deadline = System.nanoTime() + 2000000000L
+      while (active.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      val stillActive = active
+      assert(stillActive.isEmpty, s"sweep jobs still active after the timeout: $stillActive")
+      // and nothing of the sweep starts afterwards
+      val n = started.size
+      Thread.sleep(500)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(started.size == n)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("apportion + A-ES composition: every group draws exactly its quota") {
