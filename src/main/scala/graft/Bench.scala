@@ -20,29 +20,24 @@ import org.apache.spark.sql.SparkSession
   * doesn't is a regression to bisect.
   */
 object Bench {
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  /** One full execution via the noop sink (never count — Catalyst
+    * eliminates count-invariant operators), returning seconds; None when
+    * the query throws, so a failure is never recorded as a fast success.
+    */
+  private[graft] def timeOne(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case _: Throwable => None }
   }
 
-  /** One full execution via the noop sink (never count — Catalyst
-    * eliminates count-invariant operators), returning seconds.
-    */
-  private def timeOne(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-    val t0 = System.nanoTime()
-    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    (System.nanoTime() - t0) / 1e9
+  /** Per-query min of two passes; a query that failed in either is left out. */
+  private def minOfPasses(p1: Seq[(String, Option[Double])],
+      p2: Seq[(String, Option[Double])]): Seq[(String, Double, Double)] = {
+    val first = p1.toMap
+    for ((n, Some(b)) <- p2; a <- first(n)) yield (n, math.min(a, b), math.max(a, b))
   }
 
   /** Child-JVM entry (`--isolated name,name,...`): a clean-heap re-time of
@@ -51,11 +46,11 @@ object Bench {
     * whole-stage-codegen compilation inside the first timed pass, so
     * cold-JVM numbers read 2–2.7× the in-run times on identical code and
     * adjudicate nothing), then two timed passes, min — printed as one
-    * `[isolated-json]` line for the parent to parse. NEVER touches
-    * bench_full.json.
+    * `[isolated-json]` line for the parent to parse (a query that failed
+    * in either pass is left out). NEVER touches bench_full.json.
     */
-  private def isolatedChild(sfDir: String, cpus: String, names: Seq[String]): Unit = {
-    val spark = buildSession(cpus)
+  private def isolatedChild(sfDir: String, names: Seq[String]): Unit = {
+    val spark = Session.local()
     val picked = SparkEntry.queries.toSeq.filter(q => names.contains(q._1)).sortBy(_._1)
     Tables.All.foreach { t =>
       try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => }
@@ -68,9 +63,10 @@ object Bench {
     // discarded warmup EXECUTION per query: pays codegen compile + JIT +
     // fixture caches outside the timed window, same as the parent run
     picked.foreach { case (_, fn) => timeOne(spark, sfDir, fn) }
-    val p1 = picked.map { case (n, fn) => n -> timeOne(spark, sfDir, fn) }.toMap
-    val res = picked.map { case (n, fn) => n -> math.min(timeOne(spark, sfDir, fn), p1(n)) }
-    println(res.map { case (k, v) =>
+    def pass() = picked.map { case (n, fn) => n -> timeOne(spark, sfDir, fn) }
+    val p1 = pass()
+    val res = minOfPasses(p1, pass())
+    println(res.map { case (k, v, _) =>
       "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     }.mkString("[isolated-json] {", ",", "}"))
     spark.stop()
@@ -113,8 +109,7 @@ object Bench {
     * named queries; returns its timings, or empty on any failure — the
     * bench line must survive a broken fork.
     */
-  private def isolatedRetime(sfDir: String, cpus: String,
-      names: Seq[String]): Map[String, Double] = {
+  private def isolatedRetime(sfDir: String, names: Seq[String]): Map[String, Double] = {
     if (names.isEmpty) return Map.empty
     try {
       import scala.jdk.CollectionConverters._
@@ -127,7 +122,6 @@ object Bench {
         "graft.Bench", "--isolated", names.mkString(","))).asJava
       val pb = new ProcessBuilder(cmd)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       pb.redirectErrorStream(true)
       val proc = pb.start()
       val out = scala.io.Source.fromInputStream(proc.getInputStream)
@@ -149,18 +143,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Measured at sf0.1 on a 32-core box: local[8] beats local[4] (CPU-bound
-    // minhash parallelism) and local[32] (tiny-partition scheduling overhead).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     if (args.length >= 2 && args(0) == "--isolated") {
-      isolatedChild(sfDir, cpus, args(1).split(",").toSeq); return
+      isolatedChild(sfDir, args(1).split(",").toSeq); return
     }
     // optional arg: comma-separated name prefixes — local iteration only
     // (the driver always times the full set)
     val only: String => Boolean =
       if (args.nonEmpty) { val ps = args(0).split(","); n => ps.exists(n.startsWith) }
       else _ => true
-    val spark = buildSession(cpus)
+    // Session.local() reads SPARK_GRAFT_CPUS (the isolated child inherits
+    // it). Measured at sf0.1 on a 32-core box: local[8] beats local[4]
+    // (CPU-bound minhash parallelism) and local[32] (tiny-partition
+    // scheduling overhead).
+    val spark = Session.local()
 
     // warmup: touch every table + exercise shuffle/window/join machinery once
     Tables.All.foreach { t =>
@@ -196,20 +191,22 @@ object Bench {
     // Catalyst eliminate joins/aggregations that don't change the count
     // (q18's whole aggregation disappears under count, for one), silently
     // under-reporting any query whose tail is count-eliminable.
-    def timeAll(): Seq[(String, Double)] =
+    def timeAll(): Seq[(String, Option[Double])] =
       SparkEntry.queries.toSeq.filter(q => only(q._1)).sortBy(_._1).map { case (name, fn) =>
         name -> timeOne(spark, sfDir, fn)
       }
     // prior round's artifact — read BEFORE this run overwrites it
     val prior = readPriorFull()
-    val p1 = timeAll().toMap
+    val p1 = timeAll()
     val p2 = timeAll()
-    val results = p2.map { case (n, t) => n -> math.min(t, p1(n)) }
+    val passes = minOfPasses(p1, p2)
+    val results = passes.map { case (n, lo, _) => n -> lo }
+    // a query that threw in either pass: named in both artifacts, left
+    // out of the total, the spread and the movers
+    val failed = p2.map(_._1).filterNot(results.map(_._1).toSet)
     // per-query two-pass spread (max/min): the in-run noise floor a
     // verdict reads a round-over-round mover against
-    val spread = p2.map { case (n, t) =>
-      n -> math.max(t, p1(n)) / math.max(1e-9, math.min(t, p1(n)))
-    }.toMap
+    val spread = passes.map { case (n, lo, hi) => n -> hi / math.max(1e-9, lo) }.toMap
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val sfName = sfDir.split('/').last
     // Locale.ROOT: the f-interpolator is locale-sensitive — a
@@ -231,15 +228,16 @@ object Bench {
       else results.filter(_._2 >= 0.25).sortBy(r => -spread(r._1)).take(10).map(_._1)
     val isolated =
       if (results.size < 20) Map.empty[String, Double] // local partial runs skip the fork
-      else isolatedRetime(sfDir, cpus, movers)
+      else isolatedRetime(sfDir, movers)
     def jmap(m: Map[String, Double], dp: Int): String =
       m.toSeq.sortBy(_._1).map { case (k, v) =>
         "\"" + k + "\":" + String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
       }.mkString("{", ",", "}")
     val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfName","queries":$fullQs,"spread":${jmap(spread, 2)},"isolated":${jmap(isolated, 3)}}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfName","failed":$failedJs,"queries":$fullQs,"spread":${jmap(spread, 2)},"isolated":${jmap(isolated, 3)}}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         (fullLine + "\n").getBytes("UTF-8"))
@@ -265,7 +263,7 @@ object Bench {
       val compact = ordered.map { case (k, v) =>
         s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * div)}"""
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries_unit":"$unit","queries_key":"q#","queries":$compact,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","failed":${failed.size},"queries_unit":"$unit","queries_key":"q#","queries":$compact,"sf":"$sfName"}"""
     }
     val budget = 1870 // 2000-byte tail − sbt footer − [info] prefix margin
     // last-resort degradation: when even deciseconds can't fit the full
@@ -284,7 +282,7 @@ object Bench {
       val compact = kept.sortBy(r => (qnum(r._1), r._1)).map { case (k, v) =>
         s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * 100)}"""
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries_unit":"cs","queries_key":"q#","queries_omitted":${results.size - kept.size},"queries":$compact,"sf":"$sfName","full":"bench_full.json"}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","failed":${failed.size},"queries_unit":"cs","queries_key":"q#","queries_omitted":${results.size - kept.size},"queries":$compact,"sf":"$sfName","full":"bench_full.json"}"""
     }
     val line = Seq("ms" -> 1000.0, "cs" -> 100.0, "ds" -> 10.0)
       .map { case (u, d) => officialLine(u, d) }

@@ -93,7 +93,7 @@ object ExactSubstr {
     * persisted (MEMORY_AND_DISK) between its two consumers — the dup
     * aggregate and the join-back. The kernel (one md5 per token
     * position) is ~2/3 of the operator's cost, so recomputing it is a
-    * measured ~1.5× slowdown (AbExactSubstr, sf0.1); at 100 TB the same
+    * measured ~1.5× slowdown (sf0.1, SURVEY §5.8); at 100 TB the same
     * trade holds — gram rows are ~40 bytes/position, far cheaper to
     * spill than to rebuild from text. Pass false only when executor
     * storage is the binding constraint. The persisted RDD is released

@@ -232,7 +232,7 @@ object PageRank {
       dampDen: Long,
       sharedEdges: Boolean
   ): DataFrame = {
-    // Iterative-plan discipline (measured at sf0.1, AbGraph):
+    // Iterative-plan discipline (measured at sf0.1, SURVEY §5.8):
     // 1. WITHOUT materialization, iteration i's lazy plan contains
     //    iterations 1..i−1 — O(iters²) recompute.
     // 2. localCheckpoint for the per-iteration frames is a TRAP: a

@@ -52,8 +52,8 @@ object Quantiles {
     * med broadcast-within-partition, deviation rank, mad) shares the
     * group-key partitioning, so the med attaches as a window aggregate
     * instead of a groupBy+rejoin (the rejoin forced a second scan +
-    * exchange of the fact — [[graft.AbMad]] min-of-3 at sf0.1 measured
-    * 1.5–1.9× across reruns (1.85 r8 initial, 1.64 r8 rerun, 1.53 r9),
+    * exchange of the fact — min-of-3 at sf0.1 measured 1.5–1.9× across
+    * reruns, SURVEY Round-8 closing state (1.85 r8 initial, 1.64 r8 rerun, 1.53 r9),
     * always over the 1.3× adopt bar, arm equivalence asserted), and the
     * final aggregation reuses the same keys.
     * Per-group state is the window sort, never a collect.
@@ -371,8 +371,8 @@ object Quantiles {
     * (~group/cells for spread values), never the group.
     *
     * Costs one extra scan (the stats pass) vs the windowed arm's single
-    * shuffle — the [[graft.AbQuantiles]] A/B on a one-hot-group corpus
-    * measures which dominates at which shape. Caveat: a group whose hot
+    * shuffle — the one-hot-group A/B in SURVEY §5.10 records which
+    * dominates at which shape. Caveat: a group whose hot
     * VALUE repeats (not just a hot KEY) collapses into one cell and
     * re-creates the single-reducer sort; value-identical groups are
     * where [[approxQuantiles]] is the honest scale path.
@@ -534,8 +534,8 @@ object Quantiles {
     * sort is replaced by the [[cellScaffold]] layout: the largest sort is
     * one value cell, the aggregation is map-side partial — the 100×
     * hot-group path the windowed form can't take. Costs the scaffold's
-    * extra stats/counts passes; [[graft.AbQuantiles]] measures the
-    * crossover (~1M rows/group, same corpus as the quantile A/B).
+    * extra stats/counts passes; SURVEY §5.11 records the crossover
+    * (~1M rows/group, same corpus as the quantile A/B).
     */
   def giniBucketed(
       df: DataFrame,
@@ -718,8 +718,8 @@ object Quantiles {
     * never the group. The 100× hot-group path the windowed arm can't
     * take (its rank is consumed by an equality against a data-dependent
     * rank, so WindowGroupLimit can never prune it — the q230 lesson).
-    * Costs each side the scaffold's extra stats/counts passes; the
-    * [[graft.AbTwinSkew]] A/B measures the crossover. The hot-VALUE
+    * Costs each side the scaffold's extra stats/counts passes; SURVEY
+    * §5.12 records the crossover. The hot-VALUE
     * caveat of [[exactQuantilesBucketed]] applies per side.
     */
   def quantileShiftBucketed(

@@ -565,8 +565,8 @@ object Profiler {
     * Cost shape: two (group, cell) exchanges + the moments exchange vs
     * the windowed arm's ONE exchange — but the largest sort anywhere is
     * a cell population, so this is the 100× hot-group path
-    * ([[graft.AbQuantiles]] measures the crossover; the quantile A/B's
-    * 3.91× at 4.8M rows/group is the same layout). Hot-VALUE groups
+    * (SURVEY §5.11 records the crossover; the quantile A/B's 3.91× at
+    * 4.8M rows/group, §5.10, is the same layout). Hot-VALUE groups
     * still collapse into one cell — [[graft.operators.Sketches]]' bottom-k
     * sample path is the honest answer there.
     */
@@ -747,8 +747,8 @@ object Profiler {
     * column — no per-group reducer sort anywhere), then the same one
     * moments aggregation and pair generator. Cost: one (group, cell)
     * exchange per column instead of the shared single exchange — the
-    * hot-group trade [[graft.AbQuantiles]] prices (`spearman` op)
-    * applied per column.
+    * hot-group trade SURVEY §5.11 prices (`spearman` op) applied per
+    * column.
     */
   def spearmanMatrixBucketed(
       df: DataFrame,

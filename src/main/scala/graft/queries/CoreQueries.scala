@@ -439,8 +439,7 @@ object CoreQueries {
 
   /** Skew-safe exact quantiles gate — [[Quantiles.exactQuantilesBucketed]]
     * on the q39 shape, proving the bucketed-rank path (no per-group
-    * single-reducer sort; [[graft.AbQuantiles]] measured 3.9× at a 4M-row
-    * hot group) selects BIT-IDENTICAL values: the oracle is the same
+    * single-reducer sort; 3.9× at a 4M-row hot group, SURVEY §5.10) selects BIT-IDENTICAL values: the oracle is the same
     * plain rank-selection replay q39 uses — rank selection has one right
     * answer regardless of which layout computed it.
     */

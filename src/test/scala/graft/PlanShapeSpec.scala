@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * limit, a broadcast that demotes to sort-merge, a narrow scrub that
   * grows a shuffle) silently survives the value-correctness gate, so it
   * gets its own spec. Regenerate the human-readable audit record with
-  * `runMain graft.PlanAudit <sfDir> <outDir>`.
+  * `runMain graft.Probe --plans <sfDir> <outDir>`.
   *
   * Counting rules: `Exchange hash/range/Single` are SHUFFLES
   * (BroadcastExchange intentionally not counted — broadcast is the
@@ -172,8 +172,9 @@ class PlanShapeSpec extends SparkSpec {
     Shape("q150_skew_profile", maxHash = 2, maxRange = 2, requireTopK = true,
       forbidUdf = true),
     // MAD outliers: ONE group-key exchange shared by every window (med
-    // attaches as a window aggregate, not a rejoin — the r8 fix, AbMad
-    // 1.5–1.9× across reruns) and the final aggregation; no join at all
+    // attaches as a window aggregate, not a rejoin — the r8 fix, 1.5–1.9×
+    // across reruns, SURVEY Round-8 closing state) and the final
+    // aggregation; no join at all
     Shape("q152_mad_outliers", maxHash = 1, forbidSortMergeJoin = true,
       forbidUdf = true),
     // quantile sketch: the hash-cut window + the report window + the
