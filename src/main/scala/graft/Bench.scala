@@ -178,9 +178,9 @@ object Bench {
     // every query once, untimed, so a post-regen cold cache can never
     // land inside a timed pass (r6 driver bench showed q85 at 2.12×
     // for exactly this reason). The cost is logged so a driver run
-    // stays interpretable.
+    // stays interpretable. A name-prefix run warms only its own queries.
     val tFix = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    SparkEntry.queries.toSeq.filter(q => only(q._1)).sortBy(_._1).foreach { case (_, fn) =>
       try { fn(spark, sfDir); () } catch { case _: Throwable => () }
     }
     println(f"[bench] fixture warm + plan construction: ${(System.nanoTime() - tFix) / 1e9}%.1f s")

@@ -102,13 +102,11 @@ object ConnectedComponents {
       edges: DataFrame,
       localEdgeThreshold: Int
   ): Option[DataFrame] = {
-    import org.apache.spark.sql.types.LongType
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val longIds = Seq(edges.schema.fields.find(_.name == "src"),
         edges.schema.fields.find(_.name == "dst"))
       .forall(_.exists(_.dataType == LongType))
     if (!longIds) return None
-    val spark = edges.sparkSession
-    import spark.implicits._
     val rows = collectLocal(edges.select(col("src"), col("dst")), localEdgeThreshold) match {
       case Some(r) => r
       case None => return None
@@ -128,7 +126,13 @@ object ConnectedComponents {
       val ra = find(a); val rb = find(b)
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    Some(parent.keys.toSeq.map(k => (k, find(k))).toDF("node", "component"))
+    // Rows + a StructType, not toDF on tuples: no reflection encoder
+    val out = new java.util.ArrayList[Row](parent.size)
+    parent.keys.toArray.foreach(k => out.add(Row(k, find(k))))
+    val schema = StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("component", LongType, nullable = false)))
+    Some(edges.sparkSession.createDataFrame(out, schema))
   }
 
   private def distributedLabelPropagation(edges: DataFrame, maxIter: Int): DataFrame = {

@@ -127,6 +127,12 @@ object MinHashLsh {
     * stays inside the projection's whole-stage codegen. Documents with
     * fewer than k tokens (and NULL text) drop out. Narrow (no shuffle),
     * so the distributed plan is unchanged.
+    *
+    * The drop filters on `size(tokens) >= k` — the exact condition under
+    * which the signature is non-NULL — not on `sig IS NOT NULL`: Catalyst
+    * pushes the filter below [[graft.sources.Layout.ensureParallelism]]'s
+    * exchange, and a pushed `sig IS NOT NULL` ran the minhash kernel a
+    * second time, on the un-spread input splits.
     */
   def signatures(
       df: DataFrame,
@@ -148,8 +154,8 @@ object MinHashLsh {
     // signature cost is ~numHashes × grams hash-ops per row; spread a
     // low-split input across the cluster first (no-op on healthy splits)
     graft.sources.Layout.ensureParallelism(df)
+      .filter(size(Shingles.tokens(col(textCol))) >= k)
       .select(col(idCol), sigCol.as("sig", meta))
-      .filter(col("sig").isNotNull)
   }
 
   /** Schema-metadata key carrying [[SignatureFormatVersion]] on the `sig`
@@ -314,6 +320,19 @@ object MinHashLsh {
 
   /** Candidate pairs (idA < idB) with `est_jaccard` = fraction of agreeing
     * signature positions, filtered to >= minJaccard.
+    *
+    * Scale shape: a corpus whose (band, bh, id) rows fit
+    * [[ConnectedComponents.LocalEdgeBound]] — at most `LocalEdgeBound /
+    * bands` signed documents — is blocked on the driver: ONE bounded
+    * [[ConnectedComponents.collectLocal]] of (id, sig, band hashes), the
+    * band hashes taken by the same `xxhash64(slice(sig, …))` expression
+    * the distributed path groups on, then buckets of 2 to `maxBucketSize`
+    * ids, pair dedup and the estimate filter in driver memory, returned as
+    * a LocalRelation with the distributed path's schema (no signature
+    * cache is left behind). Over the bound, on a non-LONG id column, on a
+    * NULL id or on a repeated id, it falls back to the distributed path:
+    * one shuffle to band buckets, one for the pair dedup and the two
+    * signature payload joins.
     */
   def candidatePairs(
       df: DataFrame,
@@ -326,8 +345,97 @@ object MinHashLsh {
       maxBucketSize: Int = 200,
       seed: Long = 42L,
       persistSignatures: Boolean = true
+  ): DataFrame =
+    boundedCandidatePairs(df, idCol, textCol, k, numHashes, bands, minJaccard, maxBucketSize,
+      seed, persistSignatures, ConnectedComponents.LocalEdgeBound / bands)
+
+  /** [[candidatePairs]] with the driver twin's row bound explicit (0 =
+    * always distributed).
+    */
+  private[graft] def boundedCandidatePairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      k: Int,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double,
+      maxBucketSize: Int,
+      seed: Long,
+      persistSignatures: Boolean,
+      localRowBound: Int
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val sigsRaw = signatures(df, idCol, textCol, k, numHashes, seed)
+    localCandidatePairs(sigsRaw, idCol, numHashes, bands, minJaccard, maxBucketSize, localRowBound)
+      .getOrElse(distributedCandidatePairs(sigsRaw, idCol, numHashes, bands, minJaccard,
+        maxBucketSize, persistSignatures))
+  }
+
+  /** The driver twin of [[distributedCandidatePairs]]; None when it must
+    * fall back (see [[candidatePairs]]' scale shape).
+    */
+  private def localCandidatePairs(
+      sigs: DataFrame,
+      idCol: String,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double,
+      maxBucketSize: Int,
+      localRowBound: Int
+  ): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    if (sigs.schema(idCol).dataType != LongType) return None
+    val r = numHashes / bands
+    val bandHashes = (0 until bands).map(j => xxhash64(slice(col("sig"), j * r + 1, r)))
+    val rows = ConnectedComponents.collectLocal(
+        sigs.select(col(idCol) +: col("sig") +: bandHashes: _*), localRowBound) match {
+      case Some(rs) => rs
+      case None => return None
+    }
+    val ids = rows.map(_.getLong(0))
+    // a repeated id fans out in the distributed path's payload joins
+    if (ids.distinct.length != ids.length) return None
+    val sig = rows.map(_.getSeq[Long](1).toArray)
+    // (row index of the smaller id) << 32 | (row index of the larger id)
+    val pairs = scala.collection.mutable.HashSet.empty[Long]
+    for (j <- 0 until bands) {
+      val buckets = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[Int]]
+      rows.indices.foreach { i =>
+        buckets.getOrElseUpdate(rows(i).getLong(2 + j), scala.collection.mutable.ArrayBuffer.empty) += i
+      }
+      buckets.valuesIterator.filter(b => b.length >= 2 && b.length <= maxBucketSize).foreach { b =>
+        for (x <- b.indices; y <- x + 1 until b.length) {
+          val (u, v) = if (ids(b(x)) < ids(b(y))) (b(x), b(y)) else (b(y), b(x))
+          pairs += (u.toLong << 32) | v.toLong
+        }
+      }
+    }
+    val out = new java.util.ArrayList[Row]()
+    pairs.toArray.sorted.foreach { p =>
+      val (u, v) = ((p >>> 32).toInt, p.toInt)
+      var eq = 0; var h = 0
+      while (h < numHashes) { if (sig(u)(h) == sig(v)(h)) eq += 1; h += 1 }
+      val est = eq.toDouble / numHashes
+      if (est >= minJaccard) out.add(Row(ids(u), ids(v), est))
+    }
+    val schema = StructType(Seq(
+      StructField("id_a", LongType, nullable = false),
+      StructField("id_b", LongType, nullable = false),
+      StructField("est_jaccard", DoubleType, nullable = false)))
+    Some(sigs.sparkSession.createDataFrame(out, schema))
+  }
+
+  private def distributedCandidatePairs(
+      sigsRaw: DataFrame,
+      idCol: String,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double,
+      maxBucketSize: Int,
+      persistSignatures: Boolean
+  ): DataFrame = {
     // The signature frame feeds three plan branches (band explode + both
     // payload joins); persist it so the corpus is shingled once, not
     // thrice. The blocks cannot be freed here (the result is lazy and
@@ -335,7 +443,6 @@ object MinHashLsh {
     // once the returned plan is garbage-collected — callers looping over
     // many corpora should pass persistSignatures = false and persist/
     // unpersist around their own lifecycle instead.
-    val sigsRaw = signatures(df, idCol, textCol, k, numHashes, seed)
     val sigs = if (persistSignatures)
       sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else sigsRaw

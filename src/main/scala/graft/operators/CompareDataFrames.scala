@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   *  - Null-safe equality (`<=>`) for change detection, like the reference.
   *
   * At 100 TB: the join shuffles both sides once on the key columns; the
-  * change map is computed row-local post-join (no extra exchange). If one
-  * side is small it broadcast-joins automatically (AQE).
+  * change map is computed row-local post-join (no extra exchange), and
+  * only on changed rows — every joined row pays one codegen'd
+  * `OR(NOT l <=> r)`, never the map's lambda. If one side is small it
+  * broadcast-joins automatically (AQE).
   */
 object CompareDataFrames {
 
@@ -51,56 +53,72 @@ object CompareDataFrames {
     val k0l = col(s"df1.${keyColumns.head}")
     val k0r = col(s"df2.${keyColumns.head}")
     val valueCols = df1.columns.filterNot(keyColumns.contains).toSeq
+    def differs(n: String): Column = not(col(s"df1.$n") <=> col(s"df2.$n"))
+    def asString(n: String, side: String): Column = col(s"$side.$n").cast("string")
 
-    def changeCol(name: String): Column = {
-      val hasChanges = not(col(s"df1.$name") <=> col(s"df2.$name"))
-      when(hasChanges, struct(
-        col(s"df1.$name").cast("string").as("before"),
-        col(s"df2.$name").cast("string").as("after")
-      ))
-    }
-
+    // the category is decided by one codegen'd OR; the change map (whose
+    // array_compact is a lambda `filter`, outside whole-stage codegen) is
+    // built only on rows already known to have changed
+    val anyChange = valueCols.map(differs).reduceOption(_ || _).getOrElse(lit(false))
     val changeMap = map_from_arrays(
-      array_compact(array(valueCols.map(n => when(not(col(s"df1.$n") <=> col(s"df2.$n")), lit(n))): _*)),
-      array_compact(array(valueCols.map(changeCol): _*))
+      array_compact(array(valueCols.map(n => when(differs(n), lit(n))): _*)),
+      array_compact(array(valueCols.map(n =>
+        when(differs(n), struct(asString(n, "df1").as("before"), asString(n, "df2").as("after")))): _*))
     )
 
     val category = when(k0l.isNull, "added")
       .when(k0r.isNull, "removed")
-      .when(size(changeMap) > 0, "changed")
+      .when(anyChange, "changed")
       .otherwise("not_changed")
-
-    val tagged = joined.select(
-      keyColumns.map(col) ++ Seq(changeMap.as("changed"), category.as("__category")) ++
-        df1.columns.filterNot(keyColumns.contains).map(n => col(s"df1.$n")).toSeq ++
-        df2.columns.filterNot(keyColumns.contains).map(n => col(s"df2.$n").as(s"__df2_$n")).toSeq: _*
-    )
 
     val added = joined.filter(k0l.isNull).select(col("df2.*"))
     val removed = joined.filter(k0r.isNull).select(col("df1.*"))
-    val shared = tagged.filter(col("__category").isin("changed", "not_changed"))
-    val changed = shared.filter(col("__category") === "changed")
-      .select(keyColumns.map(col) :+ col("changed"): _*)
-    val notChanged = shared.filter(col("__category") === "not_changed")
-      .select(keyColumns.map(col) :+ col("changed"): _*)
+    val shared = joined.filter(k0l.isNotNull && k0r.isNotNull)
+    val changedRows = shared.filter(anyChange)
+    val changed = changedRows.select(keyColumns.map(col) :+ changeMap.as("changed"): _*)
+    val notChanged = shared.filter(not(anyChange))
+      .select(keyColumns.map(col) :+ emptyChangeMap.as("changed"): _*)
 
-    val summary = tagged.groupBy(col("__category").as("category"))
+    val summary = joined.groupBy(category.as("category"))
       .agg(count(lit(1)).as("cnt"))
 
+    // one nullable struct per value column, NULL where it did not change:
+    // explode and drop the NULLs — no higher-order function
     val changedLong = {
-      val entries = explode(map_entries(col("changed")))
-      changed.select(keyColumns.map(col) :+ entries.as("e"): _*)
+      val entries =
+        if (valueCols.isEmpty) Seq(lit(null).cast(EntryType))
+        else valueCols.map(n => when(differs(n), struct(lit(n).as("column_name"),
+          asString(n, "df1").as("before"), asString(n, "df2").as("after"))))
+      def notNull(c: Column): Column = org.apache.spark.sql.graftbridge.column(
+        org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+          org.apache.spark.sql.graftbridge.expression(c)))
+      changedRows.select(keyColumns.map(col) :+ explode(array(entries: _*)).as("e"): _*)
+        .filter(col("e").isNotNull)
         .select(
           keyColumns.map(col) ++ Seq(
-            col("e.key").as("column_name"),
-            col("e.value.before").as("before"),
-            col("e.value.after").as("after")
+            notNull(col("e.column_name")).as("column_name"),
+            col("e.before").as("before"),
+            col("e.after").as("after")
           ): _*
         )
     }
 
     Compared(keyColumns.toSeq, added, removed, changed, notChanged, summary, changedLong,
       cached = if (cache) Some(joined) else None)
+  }
+
+  /** One changedLong entry before it is exploded. */
+  private val EntryType = org.apache.spark.sql.types.StructType.fromDDL(
+    "column_name string, before string, after string")
+
+  /** The `changed` map of a row with no change, typed like the change map. */
+  private def emptyChangeMap: Column = {
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    val valueType = StructType(Seq(StructField("before", StringType), StructField("after", StringType)))
+    org.apache.spark.sql.graftbridge.column(org.apache.spark.sql.catalyst.expressions.Literal(
+      new ArrayBasedMapData(new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any])),
+      MapType(StringType, valueType, valueContainsNull = false)))
   }
 
   /** Unpersist what a cached compare pinned (reference:

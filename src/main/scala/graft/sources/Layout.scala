@@ -18,10 +18,32 @@ object Layout {
     * plan no-op (no exchange added). Use directly upstream of a
     * CPU-dominated narrow stage whose per-row cost dwarfs one row copy
     * (minhash signatures: ~10⁴ hash ops/row vs one ~KB shuffle write).
+    *
+    * Runs no Spark job: the split count is read from the physical plan
+    * without executing it. A plan fed by an exchange, a subquery or an
+    * in-memory cache fixes its split count only when those run (AQE
+    * coalesces shuffle partitions after the map stage), and reading it
+    * there would run that work once here and again in the real query —
+    * such a frame is spread unconditionally, at the cost of one row copy.
     */
   def ensureParallelism(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    if (splitCount(df).forall(_ < par)) df.repartition(par) else df
+  }
+
+  /** The frame's split count when its plan fixes it without running any
+    * job, else None.
+    */
+  private def splitCount(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val plan = df.queryExecution.executedPlan
+    val runsJobs = plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange | _: InMemoryTableScanExec => true
+      case p => p.subqueries.nonEmpty
+    }
+    if (runsJobs) None else Some(plan.execute().getNumPartitions)
   }
 
   /** Z-order (Morton) clustering — write-time layout so that parquet

@@ -165,15 +165,19 @@ object TextAnalysis {
   /** Gopher-style document quality gate (Rae et al. 2021, appendix A1.1):
     * word-count bounds, mean-word-length bounds, symbol-to-word ratio,
     * alphabetic-word fraction, bullet/ellipsis line fractions, and a
-    * minimum stop-word count. Every rule is a codegen'd Column expression
-    * over ONE narrow projection — the gate filters a 100 TB scan with zero
-    * shuffles — and every rule is ANSI-regex-expressible, so the whole
-    * gate replays in the DuckDB oracle (q52).
+    * minimum stop-word count. The gate filters a 100 TB scan with zero
+    * shuffles, and every rule is ANSI-regex-expressible, so the whole gate
+    * replays in the DuckDB oracle (q52).
     *
-    * Word-containment counts use non-overlapping regexp_count instead of
-    * interpreted filter() lambdas: a match must start at whitespace, so at
-    * most one match lands per word and the counts are engine-identical
-    * even where match extents differ.
+    * All eight counts and the pass flag come from ONE native expression,
+    * [[graft.functions.GopherStats]], whose fields equal the regex columns
+    * listed in its scaladoc (that regex form is the definition). One
+    * expression, not eight columns, because a caller's `filter(passes)` is
+    * pushed below this projection with every alias inlined: as columns,
+    * the pushed Filter ran `split(trim(lower(text)))` 6 times, `lower` 8
+    * times and `regexp_replace` twice per document; as one struct it runs
+    * the kernel once. The ratios are derived from the counts here, in the
+    * same Column arithmetic as before.
     */
   def gopherFilters(
       df: DataFrame,
@@ -182,34 +186,24 @@ object TextAnalysis {
       minWords: Int = 30,
       maxWords: Int = 100000
   ): DataFrame = {
+    import org.apache.spark.sql.graftbridge
     val t = col(textCol)
-    val nWords = size(toks(t)).cast("long")
-    val nNonSpace = length(regexp_replace(t, "\\s", ""))
-    val nSymbols = regexp_count(t, lit("#|\\.\\.\\.|…"))
-    val nAlphaWords = regexp_count(concat(lit(" "), lower(t)), lit("\\s[^\\s]*[a-z]"))
-    val nStop = regexp_count(lower(t), lit("\\b(the|be|to|of|and|that|have|with)\\b"))
-    val nLines = (regexp_count(t, lit("\n")) + 1).cast("long")
-    val nBulletLines = regexp_count(concat(lit("\n"), t), lit("\n[ \t]*[-*•]"))
-    val nEllipsisLines = regexp_count(concat(t, lit("\n")), lit("(\\.\\.\\.|…)[ \t]*\n"))
-    df.select(
+    val kernel = graftbridge.column(graft.functions.GopherStats(
+      graftbridge.expression(t), graftbridge.expression(lower(t)), minWords, maxWords,
+      org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull))
+    def g(f: String): Column = col("__g").getField(f)
+    val nWords = g("n_words")
+    val nLines = g("n_lines")
+    df.select(col(idCol), kernel.as("__g")).select(
       col(idCol),
       nWords.as("n_words"),
-      (nNonSpace / greatest(nWords, lit(1L)).cast("double")).as("mean_word_len"),
-      (nSymbols / greatest(nWords, lit(1L)).cast("double")).as("symbol_ratio"),
-      (nAlphaWords / greatest(nWords, lit(1L)).cast("double")).as("alpha_word_frac"),
-      nStop.cast("long").as("n_stopwords"),
-      (nBulletLines / nLines.cast("double")).as("bullet_line_frac"),
-      (nEllipsisLines / nLines.cast("double")).as("ellipsis_line_frac")
-    ).withColumn(
-      "passes",
-      col("n_words").between(minWords, maxWords) &&
-        col("mean_word_len").between(3.0, 10.0) &&
-        col("symbol_ratio") < 0.1 &&
-        col("alpha_word_frac") >= 0.8 &&
-        col("n_stopwords") >= 2 &&
-        col("bullet_line_frac") < 0.9 &&
-        col("ellipsis_line_frac") < 0.3
-    )
+      (g("n_nonspace") / greatest(nWords, lit(1L)).cast("double")).as("mean_word_len"),
+      (g("n_symbols") / greatest(nWords, lit(1L)).cast("double")).as("symbol_ratio"),
+      (g("n_alpha_words") / greatest(nWords, lit(1L)).cast("double")).as("alpha_word_frac"),
+      g("n_stop").cast("long").as("n_stopwords"),
+      (g("n_bullet") / nLines.cast("double")).as("bullet_line_frac"),
+      (g("n_ellipsis") / nLines.cast("double")).as("ellipsis_line_frac"),
+      g("passes").as("passes"))
   }
 
   /** Data-mixture accounting: documents and token budget per

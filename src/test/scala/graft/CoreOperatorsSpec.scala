@@ -49,6 +49,42 @@ class CoreOperatorsSpec extends SparkSpec {
     ))
   }
 
+  test("compare evaluates no lambda per joined row: the change map is built on changed rows only") {
+    import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, HigherOrderFunction, Not}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val c = CompareDataFrames(df1, df2, Seq("id1", "id2"))
+    def plan(df: org.apache.spark.sql.DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    def evaluates(p: SparkPlan, f: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+      p.expressions.exists(_.exists(f))
+    val isLambda = (e: org.apache.spark.sql.catalyst.expressions.Expression) =>
+      e.isInstanceOf[HigherOrderFunction]
+    val isChangeTest = (e: org.apache.spark.sql.catalyst.expressions.Expression) => e match {
+      case Not(_: EqualNullSafe) => true
+      case _ => false
+    }
+    def lambdaOps(p: SparkPlan): Seq[SparkPlan] = {
+      val ops = Seq.newBuilder[SparkPlan]
+      p.foreach(op => if (evaluates(op, isLambda)) ops += op)
+      ops.result()
+    }
+    for (df <- Seq(c.summary, c.changedLong, c.notChanged, c.added, c.removed))
+      assert(lambdaOps(plan(df)).isEmpty, plan(df).toString)
+    // the map's lambda sits above the operator that keeps changed rows
+    val ops = lambdaOps(plan(c.changed))
+    assert(ops.nonEmpty, plan(c.changed).toString)
+    ops.foreach { op =>
+      assert(op.children.exists(_.exists(evaluates(_, isChangeTest))), plan(c.changed).toString)
+    }
+    assert(c.notChanged.schema == c.changed.schema)
+    assert(c.notChanged.collect().map(_.getMap[String, Any](2)).toSeq == Seq(Map.empty))
+    assert(c.changed.collect().map(_.getMap[String, Any](2).keySet).toSeq ==
+      Seq(Set("first_login_dt", "credits")))
+  }
+
   test("compare render returns the reference-style console report as a string") {
     val c = CompareDataFrames(df1, df2, Seq("id1", "id2"))
     val out = CompareDataFrames.render(c)

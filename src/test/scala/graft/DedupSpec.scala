@@ -1042,4 +1042,112 @@ class DedupSpec extends SparkSpec {
       assert(inc == want, s"w=$w pl=$pl: inc $inc\nwant $want")
     }
   }
+
+  private def lshPairs(d: org.apache.spark.sql.DataFrame, bound: Int, maxBucket: Int = 200,
+      minJaccard: Double = 0.7) =
+    MinHashLsh.boundedCandidatePairs(d, "doc_id", "text", 3, 64, 16, minJaccard, maxBucket, 42L,
+      persistSignatures = false, localRowBound = bound)
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+
+  /** 30 base documents, each with two near variants, plus 3 copies of one
+    * text (a bucket of exactly maxBucketSize = 3 in every band), 4 copies
+    * of another (one over it) and documents of fewer than k = 3 tokens.
+    */
+  private lazy val lshCorpus: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(21L)
+    val vocab = (1 to 400).map(i => s"w$i")
+    def doc(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val bases = Seq.fill(30)(doc(40))
+    val near = bases.flatMap { b =>
+      Seq(b.updated(rnd.nextInt(b.size), "zz1"), b.updated(rnd.nextInt(b.size), "zz2"))
+    }
+    val three = doc(30).mkString(" ")
+    val four = doc(30).mkString(" ")
+    val texts = (bases ++ near).map(_.mkString(" ")) ++ Seq.fill(3)(three) ++ Seq.fill(4)(four) ++
+      Seq("a b", "solo", "", "x  y")
+    texts.zipWithIndex.map { case (t, i) => (i.toLong * 7 + 3, t) }
+  }
+
+  test("candidatePairs driver twin equals the distributed path (rows and schema)") {
+    val d = lshCorpus.toDF("doc_id", "text")
+    for ((maxBucket, minJ) <- Seq((3, 0.7), (200, 0.7), (3, 0.0), (200, 0.5))) {
+      val local = lshPairs(d, 1 << 16, maxBucket, minJ)
+      val dist = lshPairs(d, 0, maxBucket, minJ)
+      assert(isLocal(local) && !isLocal(dist))
+      assert(local.schema == dist.schema, s"${local.schema} vs ${dist.schema}")
+      val rows = sortedRows(local)
+      assert(rows == sortedRows(dist), s"maxBucket=$maxBucket minJaccard=$minJ")
+      assert(rows.nonEmpty)
+      val ids = lshCorpus.map(_._1)
+      val three = ids.slice(90, 93).toSet
+      val four = ids.slice(93, 97).toSet
+      val pairIds = rows.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+      // the exactly-full bucket pairs all three copies; the 4-copy bucket
+      // is over the cap, so its copies only pair at the default cap
+      assert(pairIds.count(p => three(p._1) && three(p._2)) == 3)
+      assert(pairIds.count(p => four(p._1) && four(p._2)) == (if (maxBucket == 3) 0 else 6))
+      // under-k documents never sign
+      assert(!pairIds.exists(p => ids.drop(97).contains(p._1) || ids.drop(97).contains(p._2)))
+    }
+  }
+
+  test("candidatePairs driver twin falls back over the bound, on non-LONG ids, NULL and repeated ids") {
+    val d = lshCorpus.toDF("doc_id", "text")
+    val signed = MinHashLsh.signatures(d, "doc_id", "text").count().toInt
+    assert(isLocal(lshPairs(d, signed)))
+    val over = lshPairs(d, signed - 1)
+    assert(!isLocal(over))
+    assert(sortedRows(over) == sortedRows(lshPairs(d, 0)))
+    val intIds = d.withColumn("doc_id", col("doc_id").cast("int"))
+    val intPairs = lshPairs(intIds, 1 << 16)
+    assert(!isLocal(intPairs))
+    assert(sortedRows(intPairs) == sortedRows(lshPairs(intIds, 0)))
+    val withNull = d.unionByName(Seq((Option.empty[Long], lshCorpus.head._2)).toDF("doc_id", "text"))
+    val nullPairs = lshPairs(withNull, 1 << 16)
+    assert(!isLocal(nullPairs))
+    assert(sortedRows(nullPairs) == sortedRows(lshPairs(withNull, 0)))
+    val repeated = d.unionByName(Seq(lshCorpus.head).toDF("doc_id", "text"))
+    val repPairs = lshPairs(repeated, 1 << 16)
+    assert(!isLocal(repPairs))
+    assert(sortedRows(repPairs) == sortedRows(lshPairs(repeated, 0)))
+  }
+
+  test("near dedup on a small corpus: bounded jobs, no cached RDD left behind") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (comp, jobs) = JobCount(spark) {
+      val pairs = MinHashLsh.candidatePairs(docs, "doc_id", "text")
+        .select(col("id_a").as("src"), col("id_b").as("dst"))
+      ConnectedComponents.labelPropagation(pairs).collect()
+    }
+    info(s"$jobs Spark jobs, ${comp.length} clustered docs")
+    assert(comp.nonEmpty)
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("minhash signatures: graft_minhash in exactly one operator, above the exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // one input split: ensureParallelism spreads it with a round-robin exchange
+    val docs = Tables.documents(spark, sf).select("doc_id", "text").coalesce(1)
+    for (df <- Seq(MinHashLsh.signatures(docs, "doc_id", "text"),
+        MinHashLsh.blockedPairs(docs, "doc_id", "text"))) {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      val ops = plan.collect {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.MinHashSignature])) => p
+      }
+      assert(ops.size == 1, plan.toString)
+      assert(ops.head.exists(_.isInstanceOf[ShuffleExchangeExec]), plan.toString)
+    }
+  }
 }

@@ -572,6 +572,21 @@ class ScaleOpsSpec extends SparkSpec {
     assert(c.cached.exists(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
   }
 
+  test("ensureParallelism runs no job: a shuffled input is spread, a many-split scan is untouched") {
+    import graft.sources.Layout
+    val par = spark.sparkContext.defaultParallelism
+    val shuffled = spark.range(100000).groupBy((col("id") % 10).as("k")).count()
+    val (spread, jobs) = JobCount(spark)(Layout.ensureParallelism(shuffled))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(spread.rdd.getNumPartitions == par)
+    val scan = spark.range(0, 1000, 1, par * 2).toDF()
+    val (same, scanJobs) = JobCount(spark)(Layout.ensureParallelism(scan))
+    assert(scanJobs == 0 && (same eq scan))
+    val narrow = spark.range(0, 1000, 1, 1).toDF()
+    val (widened, narrowJobs) = JobCount(spark)(Layout.ensureParallelism(narrow))
+    assert(narrowJobs == 0 && widened.rdd.getNumPartitions == par)
+  }
+
   test("gopher gate is shuffle-free; IQR outliers shuffle exactly once") {
     import graft.text.TextAnalysis
     import graft.operators.Quantiles
