@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.dag.DAG
+import graft.sources.Layout
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   *  :197 validate_primary_key_candidate_combinations)
   *
   * Scale design: uniqueness of a candidate is one hash aggregation on the
-  * candidate columns with map-side partial aggregation; only groups with
-  * cnt > 1 survive the post-agg filter, so the driver never sees per-key
-  * rows. `duplicateStats` folds the "how many rows are in conflicted
-  * groups" question into the same single shuffle.
+  * candidate columns with map-side partial aggregation; the driver sees
+  * aggregate rows only, never per-key rows. Many candidates share one scan
+  * through [[combinationStats]]'s grouping sets, and
+  * [[validateCombinations]] runs its level-by-level search on that.
   */
 object PrimaryKey {
 
@@ -20,32 +20,21 @@ object PrimaryKey {
     def isValid: Boolean = failedRecords == 0
   }
 
-  /** If the input has fewer splits than cores (small files, single-row-group
-    * parquet), one narrow key-column shuffle first is far cheaper than
-    * running the whole expansion / sketch pass on the scan's parallelism;
-    * with healthy split counts this is a no-op.
-    */
-  private def parallelized(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
+  /** Grouping sets fused into one job by [[validateCombinations]]. */
+  private val MaxExpandPerJob = 8
 
-  /** DataFrame of duplicated key tuples: candidate columns + cnt (>1). */
-  def duplicateKeys(df: DataFrame, keyColumns: Seq[String]): DataFrame =
-    df.groupBy(keyColumns.map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") > 1)
-
-  /** One-row stats: total records and records participating in duplicate
-    * key groups. Two jobs like the reference, but the failed count is a
-    * single aggregated scan.
+  /** Total records and records participating in duplicate key groups, both
+    * from one `groupBy(keys).count()` and one global aggregate over its
+    * groups. NULL keys group together, as in any groupBy.
     */
   def validateCandidate(df: DataFrame, keyColumns: Seq[String]): Validation = {
-    val total = df.count()
-    val failed = duplicateKeys(df, keyColumns)
-      .agg(coalesce(sum("cnt"), lit(0L)).as("failed"))
-      .head().getLong(0)
-    Validation(total, failed)
+    val row = df.groupBy(keyColumns.map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+      .agg(
+        coalesce(sum("cnt"), lit(0L)),
+        coalesce(sum(when(col("cnt") > 1, col("cnt"))), lit(0L)))
+      .head()
+    Validation(row.getLong(0), row.getLong(1))
   }
 
   /** One-pass stats per candidate combination as a DataFrame:
@@ -78,11 +67,12 @@ object PrimaryKey {
     val allCols = combinations.flatten.distinct
     // The Expand multiplies every input row |combinations|-fold BEFORE the
     // first exchange, so the whole expansion+partial-agg runs at the
-    // SCAN's parallelism — see [[parallelized]].
-    val input = parallelized(df.select(allCols.map(col): _*))
+    // SCAN's parallelism: a low-split input is spread first.
+    val input = Layout.ensureParallelism(df.select(allCols.map(col): _*))
     // Spark grouping_id(): one bit per groupBy column in declaration order,
     // leftmost = most significant; bit set = column aggregated away (NOT in
-    // the grouping set). Verified against SQL GROUPING_ID in PrimaryKeySpec.
+    // the grouping set). Pinned by CoreOperatorsSpec "combinationStats
+    // fuses all candidates into one grouping-sets pass".
     def gidOf(combo: Seq[String]): Long =
       allCols.zipWithIndex.map { case (c, i) =>
         if (combo.contains(c)) 0L else 1L << (allCols.length - 1 - i)
@@ -108,161 +98,65 @@ object PrimaryKey {
       )
   }
 
-  /** Find all combinations that are valid PKs, executing checks as a DAG
-    * where a combination only runs after all of its sub-combinations failed
-    * (a superset of a unique key is trivially unique — reference prunes the
-    * same way via DAG.BREAK, bdq/dataframe.py:197).
+  /** The minimal valid PKs among `combinations`: every combination that is
+    * unique over `df` (NULL keys group together) and has no unique strict
+    * subset among the candidates — a superset of a unique key is trivially
+    * unique, which is the pruning the reference gets from DAG.BREAK
+    * (bdq/dataframe.py:197).
+    *
+    * Combinations are checked level by level (ascending size) through
+    * [[combinationStats]] grouping sets. Each level is cut into chunks of
+    * at most 8 combinations, and consecutive chunks are FUSED into one job
+    * while their grouping sets fit that budget. Fusing computes prunable
+    * supersets speculatively, but the waste is bounded (≤ 8 × one pass)
+    * while each avoided job saves a full scan and a scheduling round trip:
+    * a small candidate set is ONE job. Between jobs, candidates with a
+    * solution as a strict subset are pruned, and solutions within one job
+    * are kept only when no other solution of that job is a strict subset.
+    *
+    * The result lists solutions in ascending size, then input order.
+    * `maxWorkers` has no effect; it is kept for call parity with the
+    * reference, whose DAG ran one check per worker thread.
     */
   def validateCombinations(
       df: DataFrame,
       combinations: Seq[Seq[String]],
-      maxWorkers: Int,
-      cacheProjection: Boolean = true
-  ): Seq[Seq[String]] = {
-    // Each DAG node re-aggregates the same narrow key slice; caching the
-    // projection (only the candidate columns, MEMORY_AND_DISK so wide
-    // tables spill instead of OOM) turns N table scans into one. Callers
-    // at extreme scale can opt out and rely on parquet column pruning.
-    val allCols = combinations.flatten.distinct
-    val keySlice =
-      if (cacheProjection) {
-        val s = df.select(allCols.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        s.count() // materialize up front: concurrent DAG nodes would otherwise
-                  // race per-block and serialize on the cache locks
-        s
-      } else df
-    try validateCombinationsOn(keySlice, combinations, maxWorkers)
-    finally if (cacheProjection) { keySlice.unpersist(blocking = false); () }
-  }
-
-  /** Batched variant of [[validateCombinations]]: combinations are checked
-    * level by level (smaller first) through [[combinationStats]] grouping
-    * sets, with subset pruning between jobs — and consecutive levels are
-    * FUSED into one job while their combined grouping-set count fits
-    * `maxExpandPerJob`. Fusing computes prunable supersets speculatively,
-    * but the waste is bounded (≤ maxExpandPerJob × one pass) while each
-    * avoided job saves a full scan + scheduling round trip — for small
-    * candidate sets the whole search is ONE job (measured ~10× on q19);
-    * for wide column sets the level barrier and its pruning kick back in,
-    * which is what matters at 100 TB where every level is a full-table
-    * shuffle. Minimality is enforced after each job (a valid combination
-    * with a valid strict subset anywhere is discarded), so results match
-    * the per-node DAG path exactly (spec-asserted); the DAG path remains
-    * for reference API parity and per-candidate early-exit control.
-    */
-  /** Sketch-then-verify pre-pass for PK discovery: ONE global aggregate
-    * computes `count(*)` plus an HLL `approx_count_distinct` per candidate
-    * combination — sketches only, NO grouping-set row expansion, and the
-    * exchange carries one HLL register set per (partition, combination)
-    * instead of near-table-cardinality group rows. Any combination whose
-    * estimated distinct count falls below `(1 - margin) × rows` provably
-    * (to `margin / rsd` standard errors) has duplicates and is pruned from
-    * the exact check.
-    *
-    * The margin defaults to 6 standard errors of the sketch (rsd 0.05 →
-    * prune only below 70% distinct), so a true PK — whose distinct count
-    * equals the row count exactly — is never pruned in practice, and every
-    * survivor is still verified exactly. At 100 TB this is the difference
-    * between expanding the table |combinations|-fold and one sketch scan
-    * that eliminates the obviously-bad candidates for free.
-    *
-    * Returns the combinations that still need the exact check.
-    */
-  private[graft] def sketchSurvivors(
-      df: DataFrame,
-      combinations: Seq[Seq[String]],
-      rsd: Double,
-      sigmas: Double
-  ): Seq[Seq[String]] = {
-    val margin = (sigmas * rsd).min(0.95)
-    val aggs = count(lit(1)).as("__n") +:
-      combinations.zipWithIndex.map { case (c, i) =>
-        approx_count_distinct(struct(c.map(col): _*), rsd).as(s"__d$i")
-      }
-    // no pre-repartition here: the sketch pass is a handful of register
-    // updates per row — even on a low-split input the narrow scan is
-    // cheaper than a shuffle bought only to spread it
-    val row = df.select(combinations.flatten.distinct.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*).head()
-    val n = row.getAs[Long]("__n")
-    combinations.zipWithIndex.collect {
-      case (c, i) if row.getAs[Long](s"__d$i") >= ((1.0 - margin) * n).toLong => c
-    }
-  }
-
-  def validateCombinationsBatched(
-      df: DataFrame,
-      combinations: Seq[Seq[String]],
-      cacheProjection: Boolean = true,
-      maxExpandPerJob: Int = 8,
-      sketchPrune: Boolean = false,
-      sketchRsd: Double = 0.05,
-      sketchSigmas: Double = 6.0
-  ): Seq[Seq[String]] = {
-    val allCols = combinations.flatten.distinct
-    val keySlice =
-      if (cacheProjection) {
-        df.select(allCols.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else df
-    try {
-      val candidates =
-        if (sketchPrune) sketchSurvivors(keySlice, combinations, sketchRsd, sketchSigmas)
-        else combinations
-      var solutions = Vector.empty[Seq[String]]
-      // Levels (ascending size) pre-split into <= maxExpandPerJob chunks, so
-      // a single wide level (e.g. C(10,5) = 252 combinations) can never blow
-      // the Expand budget in one job. Same-size combinations cannot prune
-      // each other (equal-size distinct sets are never subsets), so the
-      // intra-level split loses nothing.
-      var queue = candidates.groupBy(_.size).toSeq.sortBy(_._1)
-        .flatMap { case (_, lvl) => lvl.grouped(maxExpandPerJob).toSeq }
-      while (queue.nonEmpty) {
-        var take = 1
-        var n = queue.head.size
-        while (take < queue.size && n + queue(take).size <= maxExpandPerJob) {
-          n += queue(take).size; take += 1
-        }
-        val batch = queue.take(take).flatten
-          .filter(c => !solutions.exists(s => s.toSet.subsetOf(c.toSet)))
-        queue = queue.drop(take)
-        if (batch.nonEmpty) {
-          // Solutions are recovered via the cid index, never by parsing the
-          // comma-joined label (column names may themselves contain commas).
-          val valid = combinationStatsIndexed(keySlice, batch).collect().toSeq
-            .filter(_.getAs[Long]("duplicate_records") == 0L)
-            .map(r => batch(r.getAs[Int]("cid")))
-          val all = solutions ++ valid
-          solutions ++= valid.filter(c =>
-            !all.exists(o => o.toSet != c.toSet && o.toSet.subsetOf(c.toSet)))
-        }
-      }
-      solutions
-    } finally if (cacheProjection) { keySlice.unpersist(blocking = false); () }
-  }
-
-  private def validateCombinationsOn(
-      df: DataFrame,
-      combinations: Seq[Seq[String]],
       maxWorkers: Int
+  ): Seq[Seq[String]] = levelSearch(df, combinations, MaxExpandPerJob)
+
+  /** [[validateCombinations]] with an explicit per-job grouping-set budget
+    * (specs force chunking with a small one).
+    */
+  private[graft] def levelSearch(
+      df: DataFrame,
+      combinations: Seq[Seq[String]],
+      maxExpandPerJob: Int
   ): Seq[Seq[String]] = {
-    val dag = new DAG("pk-combinations")
-    val solutions = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    val nodes = scala.collection.mutable.LinkedHashMap.empty[Seq[String], dag.Node]
-    combinations.foreach { c =>
-      val deps = nodes.collect {
-        case (cols, node) if cols.toSet.subsetOf(c.toSet) && cols.toSet != c.toSet => node
-      }.toSeq
-      val node = dag.node(s"validate(${c.mkString(",")})", dependsOn = deps) { () =>
-        val failed = duplicateKeys(df, c).limit(1).count()
-        if (failed == 0) { solutions.add(c); DAG.Break }
-        else c
+    def strictSubset(a: Seq[String], b: Seq[String]) =
+      a.toSet != b.toSet && a.toSet.subsetOf(b.toSet)
+    var solutions = Vector.empty[Seq[String]]
+    // Same-size combinations cannot prune each other (equal-size distinct
+    // sets are never strict subsets), so splitting a wide level loses nothing.
+    var queue = combinations.groupBy(_.size).toSeq.sortBy(_._1)
+      .flatMap { case (_, lvl) => lvl.grouped(maxExpandPerJob).toSeq }
+    while (queue.nonEmpty) {
+      var take = 1
+      var n = queue.head.size
+      while (take < queue.size && n + queue(take).size <= maxExpandPerJob) {
+        n += queue(take).size; take += 1
       }
-      nodes(c) = node
+      val batch = queue.take(take).flatten
+        .filter(c => !solutions.exists(strictSubset(_, c)))
+      queue = queue.drop(take)
+      if (batch.nonEmpty) {
+        // Solutions are recovered via the cid index, never by parsing the
+        // comma-joined label (column names may themselves contain commas).
+        val valid = combinationStatsIndexed(df, batch).collect().toSeq
+          .filter(_.getAs[Long]("duplicate_records") == 0L)
+          .map(_.getAs[Int]("cid")).sorted.map(batch)
+        solutions ++= valid.filter(c => !valid.exists(strictSubset(_, c)))
+      }
     }
-    dag.execute(maxWorkers)
-    import scala.jdk.CollectionConverters._
-    solutions.iterator().asScala.toSeq
+    solutions
   }
 }

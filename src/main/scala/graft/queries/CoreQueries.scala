@@ -652,19 +652,16 @@ object CoreQueries {
       .orderBy("event_id")
   }
 
-  /** Minimal valid PK combinations, level-batched: one grouping-sets scan
-    * per combination size with subset pruning between levels (the per-node
-    * DAG path is spec-asserted equal in PrimaryKeySpec). The HLL
-    * sketch-prune pre-pass (`sketchPrune = true`) is A/B-measured a net
-    * LOSS on this candidate set — the survivors are exactly the near-unique
-    * combos that dominate the exact job, so the sketch scan buys little;
-    * it pays off when wide candidate sets are mostly low-cardinality.
+  /** Minimal valid PK combinations through the level-batched grouping-sets
+    * search: the 7 candidates fit one job. The `grouping_id` bit convention
+    * it keys on is pinned by CoreOperatorsSpec "combinationStats fuses all
+    * candidates into one grouping-sets pass".
     */
   def q19PkCombinations(s: SparkSession, dir: String): DataFrame = {
     import graft.schema.SchemaOps
     val li = Tables.lineitem(s, dir)
     val combos = SchemaOps.columnCombinations(Seq("l_orderkey", "l_partkey", "l_suppkey")).toSeq
-    val solutions = PrimaryKey.validateCombinationsBatched(li, combos, cacheProjection = false)
+    val solutions = PrimaryKey.validateCombinations(li, combos, maxWorkers = 1)
     import s.implicits._
     solutions.map(_.mkString(",")).sorted.toDF("combination")
   }

@@ -197,34 +197,64 @@ class CoreOperatorsSpec extends SparkSpec {
     assert(plan.split("Expand").length == 2, s"expected one Expand (grouping sets) in:\n$plan")
   }
 
-  test("validateCombinationsBatched matches the per-node DAG path") {
+  test("validateCombinations matches a brute-force driver oracle") {
     import spark.implicits._
+    val cols = Seq("a", "b", "c", "d")
+    val combos = SchemaOps.columnCombinations(cols).toSeq
+    // a superset listed before its subset, and one set listed twice in two orders
+    val candidates = Seq(Seq("a", "b", "c"), Seq("c", "b")) ++ combos
+    def check(d: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      // ascending size, then input order (stable sort of the oracle's input order)
+      val want = PkOracle.minimalKeys(d, candidates).sortBy(_.size)
+      for (budget <- Seq(1, 2, 8))
+        assert(PrimaryKey.levelSearch(d, candidates, budget) == want, s"$what, budget $budget")
+      assert(PrimaryKey.validateCombinations(d, candidates, maxWorkers = 4) == want, what)
+    }
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      def opt[T](v: => T): Option[T] = if (rnd.nextInt(5) == 0) None else Some(v)
+      val rows = Seq.fill(6 + rnd.nextInt(6))(
+        (opt(rnd.nextInt(8).toLong), opt(rnd.nextInt(3).toLong), opt(rnd.nextInt(2)), opt("xyz".substring(rnd.nextInt(3)))))
+      // even seeds repeat a row: a duplicate row makes every combination non-unique
+      val d = (if (seed % 2 == 0) rows :+ rows.head else rows).toDF(cols: _*)
+      check(d, s"seed $seed")
+    }
+    // NULL keys group together: `a` alone is not a key, (a, b) is
+    check(Seq[(Option[Long], Option[Long], Int, String)](
+      (None, Some(1L), 1, "x"), (None, Some(2L), 1, "x"), (Some(1L), Some(1L), 1, "x")
+    ).toDF(cols: _*), "null keys")
+    // an empty table has no duplicates: every single column is a minimal key
+    check(Seq.empty[(Long, Long, Int, String)].toDF(cols: _*), "empty")
+    // minimality: (k1,k2) is a key, so no superset of it may be reported
     val d = Seq(
       (1L, 1L, "a"), (1L, 2L, "a"), (2L, 1L, "b"), (2L, 2L, "c")
     ).toDF("k1", "k2", "k3")
-    val combos = SchemaOps.columnCombinations(Seq("k1", "k2", "k3")).toSeq
-    val viaDag = PrimaryKey.validateCombinations(d, combos, maxWorkers = 4)
-    val batched = PrimaryKey.validateCombinationsBatched(d, combos)
-    assert(viaDag.map(_.mkString(",")).sorted == batched.map(_.mkString(",")).sorted)
-    // minimality: (k1,k2) is a key, so no superset of it may be reported
-    assert(batched.contains(Seq("k1", "k2")))
-    assert(!batched.exists(c => c.toSet.size > 2 && Set("k1", "k2").subsetOf(c.toSet)))
+    val keys = PrimaryKey.validateCombinations(d,
+      SchemaOps.columnCombinations(Seq("k1", "k2", "k3")).toSeq, maxWorkers = 4)
+    assert(keys.contains(Seq("k1", "k2")))
+    assert(!keys.exists(c => c.toSet.size > 2 && Set("k1", "k2").subsetOf(c.toSet)))
   }
 
-  test("sketch-pruned PK discovery matches the exact path and never prunes a true key") {
-    import spark.implicits._
-    // k1 is 25% distinct (clearly prunable); (k1,k2) is a true key the
-    // sketch margin must keep; k3 is constant (maximally prunable)
-    val d = (1L to 200L).map(i => (i % 50, i, "c")).toDF("k1", "k2", "k3")
-    val combos = SchemaOps.columnCombinations(Seq("k1", "k2", "k3")).toSeq
-    val exact = PrimaryKey.validateCombinationsBatched(d, combos)
-    val sketched = PrimaryKey.validateCombinationsBatched(d, combos, sketchPrune = true)
-    assert(exact.map(_.mkString(",")).sorted == sketched.map(_.mkString(",")).sorted)
-    // the sketch pass itself must drop the low-cardinality candidates
-    val survivors = PrimaryKey.sketchSurvivors(d, combos, rsd = 0.05, sigmas = 6.0)
-    assert(!survivors.contains(Seq("k1")))
-    assert(!survivors.contains(Seq("k3")))
-    assert(survivors.exists(_.toSet == Set("k1", "k2")))
+  test("PK discovery and candidate validation: bounded jobs, no cached RDD left behind") {
+    val orders = Tables.orders(spark, sf)
+    val li = Tables.lineitem(spark, sf)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // six candidates over three levels fit one grouping-sets batch
+    val combos = Seq(Seq("o_orderkey"), Seq("o_custkey"), Seq("o_orderstatus"),
+      Seq("o_custkey", "o_orderdate"), Seq("o_custkey", "o_orderstatus"),
+      Seq("o_orderkey", "o_custkey", "o_orderstatus"))
+    val (keys, searchJobs) = JobCount(spark) {
+      PrimaryKey.validateCombinations(orders, combos, maxWorkers = 4)
+    }
+    info(s"validateCombinations: $searchJobs Spark jobs")
+    assert(keys == Seq(Seq("o_orderkey")))
+    assert(searchJobs <= 5, s"$searchJobs jobs")
+    val (v, candidateJobs) = JobCount(spark)(PrimaryKey.validateCandidate(li, Seq("l_orderkey")))
+    info(s"validateCandidate: $candidateJobs Spark jobs")
+    assert(v.recordCount == 6000L && !v.isValid)
+    assert(candidateJobs <= 3, s"$candidateJobs jobs")
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("debounce: chain-first semantics, per-key independence, same-second id tie-break") {

@@ -57,7 +57,7 @@ class EdgeCasesSpec extends SparkSpec {
     assert(rules.toSeq == Seq(("pos", 0L, 0L)))
     val v = PrimaryKey.validateCandidate(t, Seq("k"))
     assert(v.isValid && v.recordCount == 0L)
-    assert(PrimaryKey.validateCombinationsBatched(t, Seq(Seq("k"), Seq("k", "x")))
+    assert(PrimaryKey.validateCombinations(t, Seq(Seq("k"), Seq("k", "x")), maxWorkers = 4)
       == Seq(Seq("k"))) // an empty table has no duplicates: first level wins
   }
 
@@ -258,13 +258,13 @@ class EdgeCasesSpec extends SparkSpec {
     ).toDF("k,1", "k,2", "k3", "k4")
     val cols = Seq("k,1", "k,2", "k3", "k4")
     val combos = graft.schema.SchemaOps.columnCombinations(cols).toSeq
-    // maxExpandPerJob = 2 < any level width: every level must be chunked,
-    // and solutions must come back via the cid index (the comma-joined
-    // label is ambiguous for these names)
-    val batched = PrimaryKey.validateCombinationsBatched(d, combos, maxExpandPerJob = 2)
-    val viaDag = PrimaryKey.validateCombinations(d, combos, maxWorkers = 4)
-    assert(batched.map(_.sorted).toSet == viaDag.map(_.sorted).toSet)
-    assert(batched.flatten.forall(cols.contains), s"fragmented names in $batched")
+    // budgets 1 and 2 chunk the levels of 4, 6 and 4 combinations;
+    // solutions must come back via the cid index (the comma-joined label
+    // is ambiguous for these names)
+    val want = PkOracle.minimalKeys(d, combos).sortBy(_.size)
+    assert(want.flatten.exists(_.contains(",")))
+    for (budget <- Seq(1, 2, 8))
+      assert(PrimaryKey.levelSearch(d, combos, budget) == want, s"budget $budget")
   }
 
   test("readability: hand-computed flesch, fragment floors at one sentence, vowelless text") {
