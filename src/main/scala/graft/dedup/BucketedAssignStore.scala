@@ -107,8 +107,6 @@ final class BucketedAssignStore(path: String, numBuckets: Int)
     // single listing serves the load, the write set and retention
     val vmap = VersionedBuckets.bucketVersions(spark, path)
     val priorDirs = VersionedBuckets.latestDirs(vmap, path, version)
-    def latestDirOf(b: Long): Option[String] =
-      vmap.getOrElse(b, Nil).filter(_ < version).maxOption.map(v => s"$path/bucket=$b/v=$v")
 
     val batchNodes: Option[Seq[Long]] =
       if (priorDirs.isEmpty) Some(Nil) // nothing to look up in
@@ -135,7 +133,7 @@ final class BucketedAssignStore(path: String, numBuckets: Int)
         val comps = compRows.map(_.getLong(0)).toSeq.distinct
         val compBuckets = compRows.map(_.getLong(1)).toSeq.distinct
         // members of touched components live ONLY in those comps' buckets
-        val memberDirs = compBuckets.flatMap(latestDirOf)
+        val memberDirs = compBuckets.flatMap(VersionedBuckets.latestDir(vmap, path, _, version))
         val members =
           if (comps.isEmpty) None
           else Some(scan(spark, memberDirs)
@@ -157,7 +155,7 @@ final class BucketedAssignStore(path: String, numBuckets: Int)
           // carry-over rows of affected buckets: everything there except
           // the re-solved components — a pushed Not(In) filter on dirs
           // listed for exactly the affected buckets
-          val priorAffDirs = affected.flatMap(latestDirOf)
+          val priorAffDirs = affected.flatMap(VersionedBuckets.latestDir(vmap, path, _, version))
           val carry =
             if (priorAffDirs.isEmpty)
               resolved.select("node", "component", "bucket").limit(0)

@@ -73,7 +73,7 @@ final class BucketedSpanStore(
       val touched = bs.select("bucket").distinct().collect().map(_.getLong(0)).sorted
       if (touched.nonEmpty) {
         val vmap = VersionedBuckets.bucketVersions(spark, path)
-        val priorDirs = priorDirsFor(vmap, touched, version)
+        val priorDirs = touched.toSeq.flatMap(VersionedBuckets.latestDir(vmap, path, _, version))
         // dynamic partition overwrite: ONLY the (bucket, v=version) dirs
         // present in the fold are replaced at commit — untouched buckets'
         // files are never rewritten, and a replay overwrites its own output.
@@ -92,12 +92,6 @@ final class BucketedSpanStore(
       }
     } finally { bs.unpersist(blocking = false); () }
   }
-
-  /** Latest-below-`version` dirs of exactly the `touched` buckets. */
-  private def priorDirsFor(
-      vmap: Map[Long, Seq[Long]], touched: Seq[Long], version: Long): Seq[String] =
-    touched.flatMap(b =>
-      vmap.getOrElse(b, Nil).filter(_ < version).maxOption.map(v => s"$path/bucket=$b/v=$v"))
 
   /** The frame `merge(batch, version)` would write — built, not written.
     * Spec hook: plan-assert the fold's read contract (only touched-bucket
@@ -118,7 +112,8 @@ final class BucketedSpanStore(
     else {
       val vmap = VersionedBuckets.bucketVersions(spark, path)
       Some((
-        foldFrame(spark, bs, priorDirsFor(vmap, touched, version), version, maxPushdownKeys),
+        foldFrame(spark, bs, touched.flatMap(VersionedBuckets.latestDir(vmap, path, _, version)),
+          version, maxPushdownKeys),
         touched))
     }
   }

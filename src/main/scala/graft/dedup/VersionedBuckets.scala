@@ -33,13 +33,15 @@ private[graft] object VersionedBuckets {
         }.toMap
   }
 
-  /** Per-bucket latest version strictly below `belowVersion`, as
-    * readable directories.
+  /** Bucket `bucket`'s latest version strictly below `below`, as a
+    * readable directory.
     */
+  def latestDir(vmap: Map[Long, Seq[Long]], path: String, bucket: Long, below: Long): Option[String] =
+    vmap.getOrElse(bucket, Nil).filter(_ < below).maxOption.map(v => s"$path/bucket=$bucket/v=$v")
+
+  /** [[latestDir]] of every bucket in `vmap`. */
   def latestDirs(vmap: Map[Long, Seq[Long]], path: String, belowVersion: Long): Seq[String] =
-    vmap.toSeq.flatMap { case (b, vs) =>
-      vs.filter(_ < belowVersion).maxOption.map(v => s"$path/bucket=$b/v=$v")
-    }
+    vmap.keys.toSeq.flatMap(latestDir(vmap, path, _, belowVersion))
 
   /** Retention after a fold at `version`: for each affected bucket keep
     * (latest-below, version) — the prior survives so the NEXT fold's

@@ -47,23 +47,29 @@ object PrimaryKey {
     * difference between 1× and N× I/O). Map-side partial aggregation
     * absorbs the grouping-set row expansion before the exchange.
     * `grouping_id()` identifies which combination each group row belongs
-    * to; combinations with zero duplicates are restored by a broadcast
-    * left join against the (tiny) combination list.
+    * to; combinations with zero duplicates are restored by a left join
+    * from the (tiny) combination list.
     */
-  def combinationStats(df: DataFrame, combinations: Seq[Seq[String]]): DataFrame =
-    combinationStatsIndexed(df, combinations).drop("cid")
+  def combinationStats(df: DataFrame, combinations: Seq[Seq[String]]): DataFrame = {
+    val (gids, dupStats) = duplicateStats(df, combinations)
+    import df.sparkSession.implicits._
+    combinations.map(_.mkString(",")).zip(gids).toDF("combination", "gid")
+      .join(dupStats, Seq("gid"), "left")
+      .select(
+        col("combination"),
+        coalesce(col("dg"), lit(0L)).as("duplicate_groups"),
+        coalesce(col("dr"), lit(0L)).as("duplicate_records"))
+  }
 
-  /** [[combinationStats]] plus a `cid` column carrying each combination's
-    * index in the input Seq — the machine-readable identity callers should
-    * key on (the `combination` label is display-only: column names
-    * containing commas make it ambiguous to parse back).
+  /** Each combination's `grouping_id()`, and (gid, dg, dr): duplicate
+    * groups and the records in them, one row per gid that HAS duplicates
+    * (at most one per grouping set), from one grouping-sets pass.
     */
-  private[graft] def combinationStatsIndexed(
+  private def duplicateStats(
       df: DataFrame,
       combinations: Seq[Seq[String]]
-  ): DataFrame = {
+  ): (Seq[Long], DataFrame) = {
     require(combinations.nonEmpty, "combinations must not be empty")
-    val spark = df.sparkSession
     val allCols = combinations.flatten.distinct
     // The Expand multiplies every input row |combinations|-fold BEFORE the
     // first exchange, so the whole expansion+partial-agg runs at the
@@ -84,18 +90,7 @@ object PrimaryKey {
       .filter(col("cnt") > 1)
       .groupBy("gid")
       .agg(count(lit(1)).as("dg"), sum("cnt").as("dr"))
-    import spark.implicits._
-    val labels = combinations.zipWithIndex
-      .map { case (c, i) => (gidOf(c), c.mkString(","), i) }
-      .toDF("gid", "combination", "cid")
-    broadcast(labels)
-      .join(dupStats, Seq("gid"), "left")
-      .select(
-        col("combination"),
-        coalesce(col("dg"), lit(0L)).as("duplicate_groups"),
-        coalesce(col("dr"), lit(0L)).as("duplicate_records"),
-        col("cid")
-      )
+    (combinations.map(gidOf), dupStats)
   }
 
   /** The minimal valid PKs among `combinations`: every combination that is
@@ -105,7 +100,8 @@ object PrimaryKey {
     * (bdq/dataframe.py:197).
     *
     * Combinations are checked level by level (ascending size) through
-    * [[combinationStats]] grouping sets. Each level is cut into chunks of
+    * the grouping sets of [[combinationStats]], reading only the ids of
+    * the duplicated sets back to the driver. Each level is cut into chunks of
     * at most 8 combinations, and consecutive chunks are FUSED into one job
     * while their grouping sets fit that budget. Fusing computes prunable
     * supersets speculatively, but the waste is bounded (≤ 8 × one pass)
@@ -149,11 +145,13 @@ object PrimaryKey {
         .filter(c => !solutions.exists(strictSubset(_, c)))
       queue = queue.drop(take)
       if (batch.nonEmpty) {
-        // Solutions are recovered via the cid index, never by parsing the
-        // comma-joined label (column names may themselves contain commas).
-        val valid = combinationStatsIndexed(df, batch).collect().toSeq
-          .filter(_.getAs[Long]("duplicate_records") == 0L)
-          .map(_.getAs[Int]("cid")).sorted.map(batch)
+        // The duplicated gids (at most one per grouping set) are read on
+        // the driver and matched to the batch by position, never by
+        // parsing a comma-joined label (column names may contain commas);
+        // a set listed twice shares one gid and keeps both entries.
+        val (gids, dupStats) = duplicateStats(df, batch)
+        val duplicated = dupStats.select("gid").collect().map(_.getLong(0)).toSet
+        val valid = batch.zip(gids).collect { case (c, g) if !duplicated(g) => c }
         solutions ++= valid.filter(c => !valid.exists(strictSubset(_, c)))
       }
     }

@@ -12,10 +12,15 @@ package graft.streaming
   * Layouts and their prune/replay contracts:
   *
   *   - [[FlatVersioned]] — `v=<batchId>` dirs, each a COMPLETE merged
-  *     state (cardinality-bounded, never row-scale); fold reads the
-  *     latest version STRICTLY BELOW the current batch id (deterministic
+  *     state (cardinality-bounded, never row-scale), written only by
+  *     [[StoreMaintenance.foldVersion]], which reads the latest version
+  *     STRICTLY BELOW the current batch id (deterministic
   *     recompute-on-replay), so pruning to `keepLast ≥ 2` via
   *     [[StoreMaintenance.pruneVersions]] loses time-travel only.
+  *   - [[AppendPartitioned]] — `batch_id=<n>` partitions, each holding
+  *     only its own batch's rows; readers union every partition, so all
+  *     of them are live data and there is nothing to prune (a replay
+  *     overwrites its own partition).
   *   - [[BucketVersioned]] — `bucket=<b>/v=<v>`; only TOUCHED buckets
   *     rewrite per batch (O(touched) ingest); write-time retain keeps
   *     {latest-below, current} per touched bucket and
@@ -37,6 +42,9 @@ object StoreCatalog {
   sealed trait Layout { def prunePath: String }
   case object FlatVersioned extends Layout {
     val prunePath = "StoreMaintenance.pruneVersions(keepLast >= 2)"
+  }
+  case object AppendPartitioned extends Layout {
+    val prunePath = "none: every partition is live data"
   }
   case object BucketVersioned extends Layout {
     val prunePath =
@@ -64,10 +72,11 @@ object StoreCatalog {
       gates: String)
 
   val All: Seq[StoreFamily] = Seq(
-    // --- flat versioned folds (v=<batchId>) -----------------------------
+    // --- append-partitioned (batch_id=<n>) ---------------------------------
     StoreFamily("bm25-postings", "StreamingOps.bm25IndexStream",
-      "BM25 postings + corpus stats; vocabulary-bounded", FlatVersioned,
-      "q99 prebuilt twin; Bm25 fold==rebuild spec"),
+      "per-batch BM25 postings + raw corpus stats; corpus-scale (grows with the docs)",
+      AppendPartitioned, "q99 prebuilt twin; Bm25 fold==rebuild spec"),
+    // --- flat versioned folds (v=<batchId>) -----------------------------
     StoreFamily("hll-profile", "StreamingOps.hllProfileStream",
       "per-column HLL registers; fixed register width", FlatVersioned,
       "q56/q57 sketch gates; StreamingSpec fold==rebuild"),

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Maintenance for the versioned sketch/dedup stores the streaming folds
-  * write (`v=<batchId>` dirs: HLL/CMS/quantile profiles, gram and line
-  * stores): every fold rewrites the FULL merged state into a new
-  * version — which is what makes crash replay deterministic — so a
+/** The flat versioned store layout (`v=<batchId>` dirs: HLL/CMS/quantile
+  * profiles, count cells, gram stores) and its maintenance. Every fold
+  * goes through [[foldVersion]], which rewrites the FULL merged state into
+  * a new version — which is what makes crash replay deterministic — so a
   * long-running stream accumulates one complete state copy per batch.
   * At 100 TB that is the classic small-files/unbounded-history problem;
   * pruning old versions loses only time-travel, never data, because the
@@ -28,6 +28,28 @@ object StoreMaintenance {
       .filter(_.startsWith("v="))
       .map(_.stripPrefix("v=").toLong)
       .sorted
+  }
+
+  /** Path of the newest version strictly below `beforeId`, if any. */
+  def latestBefore(spark: SparkSession, storePath: String, beforeId: Long): Option[String] =
+    versions(spark, storePath).filter(_ < beforeId).lastOption.map(v => s"$storePath/v=$v")
+
+  /** One fold step of a flat versioned store: reads the newest version
+    * strictly below `batchId` (None for the first batch) and overwrites
+    * `v=<batchId>` with `next(prev)`.
+    *
+    * The replay rule, stated once for every fold: a micro-batch that
+    * crashes after this write and before its checkpoint commit is re-run
+    * with the same id and the same rows, and recomputes `v=<batchId>`
+    * from the same predecessor. The fold never reads its own version, so
+    * non-idempotent merges (count/sum cells, bottom-k cuts) stay exact on
+    * replay, and idempotent ones (HLL max) need no special case.
+    */
+  def foldVersion(batch: DataFrame, batchId: Long, storePath: String)(
+      next: Option[DataFrame] => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    next(latestBefore(spark, storePath, batchId).map(spark.read.parquet(_)))
+      .write.mode("overwrite").parquet(s"$storePath/v=$batchId")
   }
 
   /** Delete all but the newest `keepLast` versions; returns the pruned
@@ -89,10 +111,11 @@ object StoreMaintenance {
     * [[pruneVersions]] for flat-versioned folds,
     * [[pruneBucketVersions]] for bucket-versioned ones, and a
     * documented no-op (returned as 0) for layouts with no version
-    * accumulation to reclaim (frozen snapshots rebuild wholesale;
-    * engine-watermark state is pruned by the stream itself; named
-    * tables clean via `StateStore.clean`). Returns pruned-version
-    * counts per family. Unknown family names throw — a typo must not
+    * accumulation to reclaim (append partitions are all live data;
+    * frozen snapshots rebuild wholesale; engine-watermark state is
+    * pruned by the stream itself; named tables clean via
+    * `StateStore.clean`). Returns pruned-version counts per family.
+    * Unknown family names throw — a typo must not
     * silently leave a store growing. `keepLast` ≥ 2 preserves the
     * strictly-below replay contract for every versioned family at
     * once. A swept store still folds correctly on its next batch

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming operators: watermarked windowed aggregation and
   * stateful gap-based sessionization. Both accept the streaming OR batch
@@ -295,30 +295,25 @@ object StreamingOps {
       cleanPath: String,
       quarantinePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     require(rules.nonEmpty, "rules must not be empty")
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val failed = rules
-          .map(r => when(expr(r.predicate).isNull || !expr(r.predicate), r.name))
-        val tagged = batch
-          .withColumn("__failed_rules", array_compact(array(failed: _*)))
-          .persist() // both splits derive from this one pass over the batch
-        try {
-          // overwrite of the batch's OWN directory = idempotent on replay
-          tagged.filter(size(col("__failed_rules")) === 0)
-            .drop("__failed_rules")
-            .write.mode("overwrite").parquet(s"$cleanPath/batch_id=$batchId")
-          tagged.filter(size(col("__failed_rules")) > 0)
-            .withColumn("failed_rules", concat_ws(",", col("__failed_rules")))
-            .drop("__failed_rules")
-            .write.mode("overwrite").parquet(s"$quarantinePath/batch_id=$batchId")
-        } finally { tagged.unpersist(blocking = false); () }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    eachBatch(events, checkpoint) { (batch, batchId) =>
+      val failed = rules
+        .map(r => when(expr(r.predicate).isNull || !expr(r.predicate), r.name))
+      val tagged = batch
+        .withColumn("__failed_rules", array_compact(array(failed: _*)))
+        .persist() // both splits derive from this one pass over the batch
+      try {
+        // overwrite of the batch's OWN directory = idempotent on replay
+        tagged.filter(size(col("__failed_rules")) === 0)
+          .drop("__failed_rules")
+          .write.mode("overwrite").parquet(s"$cleanPath/batch_id=$batchId")
+        tagged.filter(size(col("__failed_rules")) > 0)
+          .withColumn("failed_rules", concat_ws(",", col("__failed_rules")))
+          .drop("__failed_rules")
+          .write.mode("overwrite").parquet(s"$quarantinePath/batch_id=$batchId")
+      } finally { tagged.unpersist(blocking = false); () }
+    }
   }
 
   /** Streaming distribution-drift monitor: every micro-batch's histogram
@@ -340,24 +335,19 @@ object StreamingOps {
       psiThreshold: Double,
       reportPath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.quality.Profiler
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val report = Profiler.driftFromHistograms(
-          baselineHist,
-          Profiler.histogram(batch, column, lo, hi, nBuckets).select(col("bucket"), col("cnt")),
-          nBuckets)
-        report
-          .agg(sum("chi2_term").as("chi2"), sum("psi_term").as("psi"),
-            sum("n_cur").as("n_rows"))
-          .withColumn("drifted", col("psi") > psiThreshold)
-          .write.mode("overwrite").parquet(s"$reportPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    eachBatch(events, checkpoint) { (batch, batchId) =>
+      val report = Profiler.driftFromHistograms(
+        baselineHist,
+        Profiler.histogram(batch, column, lo, hi, nBuckets).select(col("bucket"), col("cnt")),
+        nBuckets)
+      report
+        .agg(sum("chi2_term").as("chi2"), sum("psi_term").as("psi"),
+          sum("n_cur").as("n_rows"))
+        .withColumn("drifted", col("psi") > psiThreshold)
+        .write.mode("overwrite").parquet(s"$reportPath/batch_id=$batchId")
+    }
   }
 
   /** Streaming sub-document span dedup: each micro-batch of documents is
@@ -388,27 +378,22 @@ object StreamingOps {
       statsPath: String,
       checkpoint: String,
       numBuckets: Int = 64
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        import graft.dedup.{BucketedSpanStore, SpanDedup}
-        val spark = batch0.sparkSession
-        val sink = new BucketedSpanStore(storePath, numBuckets, idCol, textCol, spanWords)
-        // both actions (stats + merge) derive from the batch — one source
-        // pass, same contract as dqGateStream's persisted split
-        val batch = batch0.persist()
-        try {
-          val store = sink.load(spark, belowVersion = batchId)
-            .getOrElse(SpanDedup.spanStore(batch.limit(0), idCol, textCol, spanWords))
-          SpanDedup.incrementalStats(batch, store, idCol, textCol, spanWords)
-            .write.mode("overwrite").parquet(s"$statsPath/batch_id=$batchId")
-          sink.merge(batch, batchId)
-        } finally { batch.unpersist(blocking = false); () }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  ): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch0, batchId) =>
+      import graft.dedup.{BucketedSpanStore, SpanDedup}
+      val spark = batch0.sparkSession
+      val sink = new BucketedSpanStore(storePath, numBuckets, idCol, textCol, spanWords)
+      // both actions (stats + merge) derive from the batch — one source
+      // pass, same contract as dqGateStream's persisted split
+      val batch = batch0.persist()
+      try {
+        val store = sink.load(spark, belowVersion = batchId)
+          .getOrElse(SpanDedup.spanStore(batch.limit(0), idCol, textCol, spanWords))
+        SpanDedup.incrementalStats(batch, store, idCol, textCol, spanWords)
+          .write.mode("overwrite").parquet(s"$statsPath/batch_id=$batchId")
+        sink.merge(batch, batchId)
+      } finally { batch.unpersist(blocking = false); () }
+    }
 
   /** Streaming duplicate CLUSTERING: each micro-batch of near-dup edges
     * (src, dst) — e.g. from incremental minhash blocking — folds into a
@@ -425,16 +410,11 @@ object StreamingOps {
       assignPath: String,
       checkpoint: String,
       numBuckets: Int = 64
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        new graft.dedup.BucketedAssignStore(assignPath, numBuckets)
-          .merge(batch, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  ): StreamingQuery =
+    eachBatch(edges, checkpoint) { (batch, batchId) =>
+      new graft.dedup.BucketedAssignStore(assignPath, numBuckets)
+        .merge(batch, batchId)
+    }
 
   /** Streaming ANN over a PREBUILT IVF-PQ index — the online form of
     * [[graft.similarity.Pq.ivfPqTopK]]: the index (one-pass cell+code
@@ -463,22 +443,17 @@ object StreamingOps {
       k: Int,
       nprobe: Int = 4,
       rerankFactor: Int = 4
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.similarity.Pq.ivfPqTopK(
-            spark.read.parquet(cellCodesPath),
-            spark.read.parquet(ivfIndexPath),
-            spark.read.parquet(codebooksPath),
-            spark.read.parquet(corpusPath),
-            batch, idCol, vecCol, k, nprobe, rerankFactor)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  ): StreamingQuery =
+    eachBatch(queries, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      graft.similarity.Pq.ivfPqTopK(
+          spark.read.parquet(cellCodesPath),
+          spark.read.parquet(ivfIndexPath),
+          spark.read.parquet(codebooksPath),
+          spark.read.parquet(corpusPath),
+          batch, idCol, vecCol, k, nprobe, rerankFactor)
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    }
 
   /** Streaming semantic dedup — [[graft.dedup.SemanticDedup]]'s online
     * admission shape: each micro-batch of new embeddings is assigned to
@@ -503,48 +478,44 @@ object StreamingOps {
       checkpoint: String,
       tau: Double,
       numBuckets: Int = 64
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    embeddings.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.dedup.SemanticDedup
-        import graft.similarity.Knn
-        val index = spark.read.parquet(ivfIndexPath)
-        val assigned = Knn.assignCells(batch, idCol, vecCol, index).persist()
-        try {
-          // touched cells: <= nlist ints — driver bookkeeping that turns
-          // the prior-corpus read into a partition-pruned scan
-          val cells = assigned.filter(col("cell") >= 0)
-            .select("cell").distinct().collect().map(_.getInt(0))
-          val corpusDir = new org.apache.hadoop.fs.Path(corpusPath)
-          val fs = corpusDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val prior =
-            if (cells.nonEmpty && fs.exists(corpusDir))
-              Some(spark.read.parquet(corpusPath)
-                .where(col("cell").isin(cells.map(c => c: Any): _*))
-                .filter(col("batch_id") =!= batchId))
-            else None
-          val inBatch = SemanticDedup.duplicatePairs(assigned, tau)
-            .select(col("id_a").as("src"), col("id_b").as("dst"))
-          val edges = prior.map { p =>
-            p.select(col("cell"), col("id").as("src"), col("v").as("pv"))
-              .join(assigned.filter(col("cell") >= 0)
-                .select(col("cell"), col("id").as("dst"), col("v").as("bv")),
-                Seq("cell"))
-              .filter(col("src") =!= col("dst") &&
-                Knn.cosine(col("pv"), col("bv")) >= tau)
-              .select(col("src"), col("dst"))
-              .unionByName(inBatch)
-          }.getOrElse(inBatch)
-          new graft.dedup.BucketedAssignStore(assignPath, numBuckets)
-            .merge(edges, batchId)
-          assigned.write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$corpusPath/batch_id=$batchId")
-        } finally { assigned.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  ): StreamingQuery =
+    eachBatch(embeddings, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import graft.dedup.SemanticDedup
+      import graft.similarity.Knn
+      val index = spark.read.parquet(ivfIndexPath)
+      val assigned = Knn.assignCells(batch, idCol, vecCol, index).persist()
+      try {
+        // touched cells: <= nlist ints — driver bookkeeping that turns
+        // the prior-corpus read into a partition-pruned scan
+        val cells = assigned.filter(col("cell") >= 0)
+          .select("cell").distinct().collect().map(_.getInt(0))
+        val corpusDir = new org.apache.hadoop.fs.Path(corpusPath)
+        val fs = corpusDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val prior =
+          if (cells.nonEmpty && fs.exists(corpusDir))
+            Some(spark.read.parquet(corpusPath)
+              .where(col("cell").isin(cells.map(c => c: Any): _*))
+              .filter(col("batch_id") =!= batchId))
+          else None
+        val inBatch = SemanticDedup.duplicatePairs(assigned, tau)
+          .select(col("id_a").as("src"), col("id_b").as("dst"))
+        val edges = prior.map { p =>
+          p.select(col("cell"), col("id").as("src"), col("v").as("pv"))
+            .join(assigned.filter(col("cell") >= 0)
+              .select(col("cell"), col("id").as("dst"), col("v").as("bv")),
+              Seq("cell"))
+            .filter(col("src") =!= col("dst") &&
+              Knn.cosine(col("pv"), col("bv")) >= tau)
+            .select(col("src"), col("dst"))
+            .unionByName(inBatch)
+        }.getOrElse(inBatch)
+        new graft.dedup.BucketedAssignStore(assignPath, numBuckets)
+          .merge(edges, batchId)
+        assigned.write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$corpusPath/batch_id=$batchId")
+      } finally { assigned.unpersist(); () }
+    }
 
   /** Streaming BM25 inverted-index maintenance — [[annStream]]'s lexical
     * twin: each micro-batch of NEW documents (disjoint ids per batch —
@@ -567,30 +538,14 @@ object StreamingOps {
       textCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.Bm25.buildIndex(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$storePath/postings/batch_id=$batchId")
-        graft.text.Bm25.corpusStatsRaw(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$storePath/stats/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  ): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      graft.text.Bm25.buildIndex(batch, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$storePath/postings/batch_id=$batchId")
+      graft.text.Bm25.corpusStatsRaw(batch, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$storePath/stats/batch_id=$batchId")
+    }
 
-  /** Streaming DSIR admission — [[graft.text.Dsir]]'s online form: the
-    * two hashed-gram models are FROZEN corpus state (parquet fixtures,
-    * the q106 prebuilt contract), each micro-batch of arriving docs is
-    * scored against them and admitted iff its integer selection key
-    * clears `minKey`. A fixed threshold (not a per-batch fraction) is
-    * the correct online semantics: the score scale is set by the frozen
-    * models, so admission is stable across batches and replays. Batch
-    * output overwrites its own `batch_id=<n>` dir (idempotent replay,
-    * same contract as the other ingest streams). Per batch: one gram
-    * pass over the batch + two ≤ numBuckets-row broadcast joins.
-    */
   /** Streaming perplexity-triage admission —
     * [[graft.text.PerplexitySample]]'s online form: the reference
     * n-gram models (unigram + bigram count frames) are FROZEN corpus
@@ -613,25 +568,31 @@ object StreamingOps {
       outPath: String,
       checkpoint: String,
       minKey: Long
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.text.{LmScore, PerplexitySample}
     val spark = docs.sparkSession
     // frozen reference models, materialized once at stream definition
     val uni = graft.text.Dsir.materializeModel(spark.read.parquet(unigramModelPath))
     val bi = graft.text.Dsir.materializeModel(spark.read.parquet(bigramModelPath))
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PerplexitySample.qualityKey(
-            LmScore.score(batch, idCol, textCol, uni, bi))
-          .filter(col("lm_key") >= minKey)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      PerplexitySample.qualityKey(
+          LmScore.score(batch, idCol, textCol, uni, bi))
+        .filter(col("lm_key") >= minKey)
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    }
   }
 
+  /** Streaming DSIR admission — [[graft.text.Dsir]]'s online form: the
+    * two hashed-gram models are FROZEN corpus state (parquet fixtures,
+    * the q106 prebuilt contract), each micro-batch of arriving docs is
+    * scored against them and admitted iff its integer selection key
+    * clears `minKey`. A fixed threshold (not a per-batch fraction) is
+    * the correct online semantics: the score scale is set by the frozen
+    * models, so admission is stable across batches and replays. Batch
+    * output overwrites its own `batch_id=<n>` dir (idempotent replay,
+    * same contract as the other ingest streams). Per batch: one gram
+    * pass over the batch + two ≤ numBuckets-row broadcast joins.
+    */
   def dsirAdmissionStream(
       docs: DataFrame,
       idCol: String,
@@ -642,7 +603,7 @@ object StreamingOps {
       checkpoint: String,
       minKey: Long,
       numBuckets: Int = 1024
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.text.Dsir
     // the models are FROZEN corpus state: read + materialize ONCE at
     // stream definition (≤ numBuckets rows each), not per micro-batch —
@@ -652,31 +613,24 @@ object StreamingOps {
     val raw = Dsir.materializeModel(spark.read.parquet(rawModelPath))
     val targetTotal = Dsir.modelTotal(target)
     val rawTotal = Dsir.modelTotal(raw)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Dsir.selectionKey(
-            Dsir.importanceSignals(batch, idCol, textCol, target, raw, numBuckets),
-            targetTotal, rawTotal)
-          .filter(col("dsir_key") >= minKey)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      Dsir.selectionKey(
+          Dsir.importanceSignals(batch, idCol, textCol, target, raw, numBuckets),
+          targetTotal, rawTotal)
+        .filter(col("dsir_key") >= minKey)
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    }
   }
 
   /** Streaming HLL distinct-count profile —
     * [[graft.operators.Sketches]]'s online form: each micro-batch's
     * register table merges (max per (group, bucket)) into a versioned
     * store, so the standing profile answers "distinct users per group so
-    * far" at 256 rows/group without ever re-reading history. The fold
-    * reads the latest version STRICTLY BELOW the current batch id and
-    * writes `v=<batchId>` — a crash-replayed batch deterministically
-    * recomputes its own version from the same predecessor (idempotent
-    * replay); and because HLL merge is max-idempotent, even a
-    * double-FOLDED batch cannot corrupt the registers. Spec: final
-    * store == registers of all batches unioned (fold == rebuild).
+    * far" at 256 rows/group without ever re-reading history. Replay:
+    * [[StoreMaintenance.foldVersion]]; because HLL merge is
+    * max-idempotent, even a double-FOLDED batch cannot corrupt the
+    * registers. Spec: final store == registers of all batches unioned
+    * (fold == rebuild).
     */
   def hllProfileStream(
       rows: DataFrame,
@@ -684,22 +638,13 @@ object StreamingOps {
       valueCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val br = graft.operators.Sketches.hllRegisters(batch, groupCols, valueCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.Sketches.mergeHllRegisters(
-            s.read.parquet(p), br, groupCols)
-          case None => br
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(br)(graft.operators.Sketches.mergeHllRegisters(_, br, groupCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming quantile-sketch profile — the distribution leg of the
     * online profiling trio next to [[hllProfileStream]] (distinct) and
@@ -707,11 +652,9 @@ object StreamingOps {
     * sample ([[graft.operators.Sketches.quantileSketch]]) merges into a
     * versioned store by union + re-cut, so the standing profile answers
     * "p50/p90 so far" at ≤ groups×k rows without re-reading history.
-    * Same version discipline as the HLL/CMS folds (v=<batchId> from the
-    * latest strictly-earlier version): bottom-k merge assumes DISJOINT
-    * row sets — a double-merged batch would duplicate (h, v) rows
-    * inside the cut — so crash replays must recompute, never re-merge,
-    * exactly the non-idempotent-CMS reasoning.
+    * Bottom-k merge assumes DISJOINT row sets — a double-merged batch
+    * would duplicate (h, v) rows inside the cut — so crash replays must
+    * recompute, never re-merge: [[StoreMaintenance.foldVersion]].
     */
   def quantileSketchStream(
       rows: DataFrame,
@@ -721,22 +664,13 @@ object StreamingOps {
       k: Int,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bs = graft.operators.Sketches.quantileSketch(batch, groupCols, valueCol, idCols, k)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.Sketches.mergeQuantileSketch(
-            s.read.parquet(p), bs, groupCols, k)
-          case None => bs
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bs)(graft.operators.Sketches.mergeQuantileSketch(_, bs, groupCols, k))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming Spearman-sketch profile — the rank-correlation leg of the
     * online profiling family: each micro-batch's bottom-k row-identity
@@ -744,9 +678,9 @@ object StreamingOps {
     * into a versioned store by union + re-cut, so the standing profile
     * answers "ρ(x, y) so far" at ≤ groups×k rows without re-reading
     * history ([[graft.operators.Sketches.spearmanSketchReport]] over the
-    * latest version). Same version discipline as [[quantileSketchStream]]:
-    * bottom-k merge assumes DISJOINT row sets, so crash replays recompute
-    * from the latest strictly-earlier version, never re-merge.
+    * latest version). Bottom-k merge assumes DISJOINT row sets, so
+    * crash replays recompute, never re-merge:
+    * [[StoreMaintenance.foldVersion]].
     */
   def spearmanSketchStream(
       rows: DataFrame,
@@ -757,23 +691,14 @@ object StreamingOps {
       k: Int,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bs = graft.operators.Sketches.spearmanSketch(
           batch, groupCols, xCol, yCol, idCols, k)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.Sketches.mergeSpearmanSketch(
-            s.read.parquet(p), bs, groupCols, k)
-          case None => bs
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bs)(graft.operators.Sketches.mergeSpearmanSketch(_, bs, groupCols, k))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming contingency-count fold — the association family's online
     * state: each micro-batch's (group, x, y) count frame
@@ -781,9 +706,9 @@ object StreamingOps {
     * versioned store, so the standing table answers "chi²/MI/V so far"
     * (via `associationCells` → `associationSummary` over the latest
     * version) at category² rows/group without re-reading history. Counts
-    * are ADDITIVE, not idempotent — crash replays must recompute from
-    * the latest STRICTLY-EARLIER version, never re-merge (the CMS
-    * reasoning, not the HLL one). Spec: fold == rebuild over all batches.
+    * are ADDITIVE, not idempotent — crash replays must recompute, never
+    * re-merge: [[StoreMaintenance.foldVersion]]. Spec: fold == rebuild
+    * over all batches.
     */
   def contingencyStream(
       rows: DataFrame,
@@ -792,22 +717,13 @@ object StreamingOps {
       yCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.Association.contingencyCounts(batch, keyCols, xCol, yCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.Association.mergeContingencyCounts(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.Association.mergeContingencyCounts(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming token-count fold — the vocabulary family's online state:
     * each micro-batch's per-(keys, token) counts
@@ -816,8 +732,7 @@ object StreamingOps {
     * card so far" ([[graft.text.CorpusLaws.vocabProfileFromCounts]])
     * and "churn vs a fitted base" ([[graft.text.CorpusLaws.vocabChurn]])
     * without re-tokenizing history. Store = keys × vocabulary rows.
-    * Same non-idempotent recompute-on-replay version discipline as
-    * [[contingencyStream]].
+    * Replay: [[StoreMaintenance.foldVersion]].
     */
   def tokenCountsStream(
       rows: DataFrame,
@@ -825,22 +740,13 @@ object StreamingOps {
       textCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.text.CorpusLaws.groupedTokenCounts(batch, keyCols, textCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.text.CorpusLaws.mergeTokenCounts(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.text.CorpusLaws.mergeTokenCounts(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming rank-cell fold — the rank-test family's online state:
     * each micro-batch's per-(keys, group, value) counts
@@ -849,8 +755,7 @@ object StreamingOps {
     * (`kruskalWallisFromCells`), two-sample (`mannWhitneyFromCells`)
     * AND scale (`brownForsytheFromCells`) over all history at
     * value-cardinality rows (bucket continuous columns first — the
-    * q210 discipline). Same non-idempotent recompute-on-replay version
-    * discipline as [[contingencyStream]].
+    * q210 discipline). Replay: [[StoreMaintenance.foldVersion]].
     */
   def rankCellsStream(
       rows: DataFrame,
@@ -859,22 +764,13 @@ object StreamingOps {
       valueCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.Association.rankCells(batch, keyCols, groupCol, valueCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.Association.mergeRankCells(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.Association.mergeRankCells(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming value-COUNT fold — the categorical drift family's online
     * state: each micro-batch's per-value counts
@@ -886,30 +782,20 @@ object StreamingOps {
     * ([[graft.quality.Profiler.hellingerFromCounts]]) against any other
     * store without rescanning history — ONE state, four gated reads.
     * Value cardinality is the store bound (a categorical audit input by
-    * contract). Same non-idempotent recompute-on-replay version
-    * discipline as [[contingencyStream]].
+    * contract). Replay: [[StoreMaintenance.foldVersion]].
     */
   def valueCountsStream(
       rows: DataFrame,
       column: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.Profiler.valueCounts(batch, column)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.Profiler.mergeValueCounts(
-            s.read.parquet(p), bc)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.Profiler.mergeValueCounts(_, bc))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming value-cell fold — the location/spread/shift family's
     * online state: each micro-batch's per-(keys, value) weight cells
@@ -920,8 +806,8 @@ object StreamingOps {
     * "quantile drift vs any other store"
     * ([[graft.operators.Quantiles.quantileShiftFromCells]]) without
     * re-reading history, at value-cardinality rows (bucket continuous
-    * columns first — the q210 discipline). Same non-idempotent
-    * recompute-on-replay version discipline as [[contingencyStream]].
+    * columns first — the q210 discipline). Replay:
+    * [[StoreMaintenance.foldVersion]].
     */
   def valueCellsStream(
       rows: DataFrame,
@@ -930,22 +816,13 @@ object StreamingOps {
       storePath: String,
       checkpoint: String,
       weightCol: Option[String] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.operators.Quantiles.valueCells(batch, keyCols, valueCol, weightCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.Quantiles.mergeValueCells(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.operators.Quantiles.mergeValueCells(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming lifetime-cell fold — the survival family's online state:
     * each micro-batch's per-(keys, duration) event/censor counts
@@ -958,8 +835,8 @@ object StreamingOps {
     * when `keyCols` ends with the cohort column) and RMST/median via
     * the KM read — ONE state, four reads. Duration cardinality is the
     * store bound (integer durations by contract — bucket continuous
-    * times first, the q210 discipline). Same non-idempotent
-    * recompute-on-replay version discipline as [[contingencyStream]].
+    * times first, the q210 discipline). Replay:
+    * [[StoreMaintenance.foldVersion]].
     */
   def lifetimeCellsStream(
       rows: DataFrame,
@@ -968,22 +845,13 @@ object StreamingOps {
       eventCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.operators.Survival.lifetimeCells(batch, keyCols, durationCol, eventCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.Survival.mergeLifetimeCells(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.operators.Survival.mergeLifetimeCells(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming A/B moment-cell fold — the experiment dashboard's online
     * state: each micro-batch's per-(arm, peek) unit/conversion counts
@@ -995,8 +863,7 @@ object StreamingOps {
     * without rescanning units. Batches carry COMPLETE units (one row
     * per randomization unit, each unit in exactly one batch — the
     * per-unit fold contract). Arm × peek cardinality is the store
-    * bound. Same non-idempotent recompute-on-replay version discipline
-    * as [[contingencyStream]].
+    * bound. Replay: [[StoreMaintenance.foldVersion]].
     */
   def abCellsStream(
       rows: DataFrame,
@@ -1007,23 +874,14 @@ object StreamingOps {
       hitCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.AbDashboard.abCells(
           batch, armCol, peekCol, yCol, xCol, hitCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.AbDashboard.mergeAbCells(
-            s.read.parquet(p), bc)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.AbDashboard.mergeAbCells(_, bc))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming TWO-COVARIATE ab-cell fold — the vector-CUPED companion
     * of [[abCellsStream]]: each micro-batch's per-(arm, peek)
@@ -1033,8 +891,8 @@ object StreamingOps {
     * vector-CUPED k-arm dashboard
     * ([[graft.quality.AbDashboard.abDashboardKArm2FromCells]]) at
     * (arms × peeks) rows per version. Same complete-unit-per-batch
-    * contract and recompute-on-replay version discipline as
-    * [[abCellsStream]].
+    * contract as [[abCellsStream]]; replay:
+    * [[StoreMaintenance.foldVersion]].
     */
   def abCells2Stream(
       rows: DataFrame,
@@ -1046,23 +904,14 @@ object StreamingOps {
       hitCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.AbDashboard.abCells2(
           batch, armCol, peekCol, yCol, x1Col, x2Col, hitCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.AbDashboard.mergeAbCells2(
-            s.read.parquet(p), bc)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.AbDashboard.mergeAbCells2(_, bc))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming scorecard-cell fold — the multi-metric companion of
     * [[abCellsStream]]: each micro-batch's per-(metric, arm, peek)
@@ -1072,8 +921,8 @@ object StreamingOps {
     * state answers the whole M-metric scorecard read
     * ([[graft.quality.AbDashboard.scorecardFromCells]] — monitors + BH
     * across metrics) at (M × arms × peeks) rows per version. Same
-    * complete-unit-per-batch contract and non-idempotent
-    * recompute-on-replay version discipline as [[abCellsStream]].
+    * complete-unit-per-batch contract as [[abCellsStream]]; replay:
+    * [[StoreMaintenance.foldVersion]].
     */
   def scorecardCellsStream(
       rows: DataFrame,
@@ -1082,23 +931,14 @@ object StreamingOps {
       metricCols: Seq[String],
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.AbDashboard.scorecardCells(
           batch, armCol, peekCol, metricCols)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.AbDashboard.mergeScorecardCells(
-            s.read.parquet(p), bc)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.AbDashboard.mergeScorecardCells(_, bc))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming paired-diff cell fold — the matched-design companion of
     * [[abCellsStream]]: each micro-batch's per-d difference counts
@@ -1107,8 +947,8 @@ object StreamingOps {
     * answers BOTH matched tests at any fold version
     * ([[graft.quality.Association.pairedTFromCells]] and
     * [[graft.quality.Association.wilcoxonSignedRankFromCells]]). Same
-    * complete-unit-per-batch contract and recompute-on-replay version
-    * discipline as [[abCellsStream]].
+    * complete-unit-per-batch contract as [[abCellsStream]]; replay:
+    * [[StoreMaintenance.foldVersion]].
     */
   def pairedDiffCellsStream(
       rows: DataFrame,
@@ -1116,22 +956,13 @@ object StreamingOps {
       yCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.Association.pairedDiffCells(batch, Nil, xCol, yCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.Association.mergePairedDiffCells(
-            s.read.parquet(p), bc, Nil)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.Association.mergePairedDiffCells(_, bc, Nil))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming Kendall cell fold — the τ-b companion of
     * [[contingencyStream]]: per-batch
@@ -1140,7 +971,7 @@ object StreamingOps {
     * standing cells answer "τ-b so far" via `kendallFromCells` at
     * value-cardinality² rows/group (bucket continuous columns first —
     * the q210 discipline — or the cell frame itself grows unbounded).
-    * Same non-idempotent version discipline as the CMS/contingency folds.
+    * Replay: [[StoreMaintenance.foldVersion]].
     */
   def kendallCellsStream(
       rows: DataFrame,
@@ -1149,53 +980,34 @@ object StreamingOps {
       yCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.Association.kendallCells(batch, keyCols, xCol, yCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.Association.mergeKendallCells(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.Association.mergeKendallCells(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming bucket-count fold — the Wasserstein/drift family's
     * online state: each micro-batch's integer-bucket histogram
     * ([[graft.quality.Profiler.bucketCounts]]) merges additively into a
     * versioned store, so the standing histogram answers "W₁ vs any
     * reference so far" ([[graft.quality.Profiler.wassersteinFromCounts]]
-    * over the latest version) at value-cardinality rows. Same
-    * non-idempotent recompute-on-replay version discipline as
-    * [[contingencyStream]].
+    * over the latest version) at value-cardinality rows. Replay:
+    * [[StoreMaintenance.foldVersion]].
     */
   def bucketCountsStream(
       rows: DataFrame,
       column: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.quality.Profiler.bucketCounts(batch, column)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.quality.Profiler.mergeBucketCounts(
-            s.read.parquet(p), bc)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.quality.Profiler.mergeBucketCounts(_, bc))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming seasonal-profile fold — the monitoring twin of
     * [[graft.operators.TimeSeries.seasonalAnomalies]]: each
@@ -1203,10 +1015,9 @@ object StreamingOps {
     * ([[graft.operators.TimeSeries.seasonalStats]]) merges additively
     * into a versioned store, so the standing profile scores NEW hours
     * against ALL history's phase populations
-    * (`seasonalAnomaliesFromStats` over the latest version). Same
-    * non-idempotent recompute-on-replay discipline as
-    * [[contingencyStream]]. Phase cardinality is fixed (24/168), so the
-    * store is keys×phase rows forever.
+    * (`seasonalAnomaliesFromStats` over the latest version). Phase
+    * cardinality is fixed (24/168), so the store is keys×phase rows
+    * forever. Replay: [[StoreMaintenance.foldVersion]].
     */
   def seasonalStatsStream(
       rows: DataFrame,
@@ -1215,22 +1026,13 @@ object StreamingOps {
       valueCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bs = graft.operators.TimeSeries.seasonalStats(batch, keyCols, phaseCol, valueCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.TimeSeries.mergeSeasonalStats(
-            s.read.parquet(p), bs, keyCols, phaseCol)
-          case None => bs
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bs)(graft.operators.TimeSeries.mergeSeasonalStats(_, bs, keyCols, phaseCol))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming A-ES weighted sample — the standing top-k-per-group
     * sample over everything seen so far, folded batch-by-batch: the
@@ -1239,9 +1041,9 @@ object StreamingOps {
     * the classic mergeable-reservoir property, here bit-exact, not just
     * distributionally. Each fold re-runs the race on the deduplicated
     * union (identical rows collapse), which also makes a double-FOLDED
-    * crash replay harmless (HLL-like idempotence) on top of the usual
-    * recompute-from-earlier version discipline. Store stays ≤ groups×k
-    * rows forever.
+    * crash replay harmless (HLL-like idempotence) on top of
+    * [[StoreMaintenance.foldVersion]]'s recompute-on-replay. Store stays
+    * ≤ groups×k rows forever.
     */
   def weightedSampleStream(
       rows: DataFrame,
@@ -1251,27 +1053,19 @@ object StreamingOps {
       k: Int,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bs = graft.operators.Sampling.weightedSampleWithoutReplacement(
           batch, groupCols, idCols, weightCol, k)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) =>
-            val standing = s.read.parquet(p).drop("l9", "rank")
-            graft.operators.Sampling.weightedSampleWithoutReplacement(
-              standing.unionByName(bs.drop("l9", "rank"))
-                .dropDuplicates(groupCols ++ idCols),
-              groupCols, idCols, weightCol, k)
-          case None => bs
+        prev.fold(bs) { standing =>
+          graft.operators.Sampling.weightedSampleWithoutReplacement(
+            standing.drop("l9", "rank").unionByName(bs.drop("l9", "rank"))
+              .dropDuplicates(groupCols ++ idCols),
+            groupCols, idCols, weightCol, k)
         }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming slot-count fold — the state that makes the WHOLE trend
     * family streaming-capable with one store: each micro-batch's sparse
@@ -1280,8 +1074,7 @@ object StreamingOps {
     * version ([[graft.operators.TimeSeries.densifyCounts]]) and run
     * ACF / Mann–Kendall / Theil–Sen / changepoint / seasonal / EWMA
     * over ALL history without re-reading events. Store = keys × active
-    * slots (span-bounded). Same non-idempotent recompute-on-replay
-    * version discipline as [[contingencyStream]].
+    * slots (span-bounded). Replay: [[StoreMaintenance.foldVersion]].
     */
   def slotCountsStream(
       rows: DataFrame,
@@ -1290,22 +1083,13 @@ object StreamingOps {
       storePath: String,
       checkpoint: String,
       step: String = "1 hour"
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.operators.TimeSeries.slotCounts(batch, keyCols, tsCol, step)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.TimeSeries.mergeSlotCounts(
-            s.read.parquet(p), bc, keyCols)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.operators.TimeSeries.mergeSlotCounts(_, bc, keyCols))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   final case class DebounceEvent(key: String, event_id: Long, ts_sec: Long)
 
@@ -1479,10 +1263,9 @@ object StreamingOps {
     * alignment; within-batch duplicates keep their batch-first), the
     * cleaned docs land under `outPath/batch_id=<n>` (overwrite —
     * idempotent replay), and the batch's gram store folds into a
-    * versioned store dir (the [[hllProfileStream]] version discipline:
-    * v=<batchId> computed from the latest strictly-earlier version, so
-    * a crash-replayed batch recomputes rather than double-merges — the
-    * min/sum fold never sees its own output). Per batch: one gram pass
+    * versioned store dir through [[StoreMaintenance.foldVersion]], so a
+    * crash-replayed batch recomputes rather than double-merges — the
+    * min/sum fold never sees its own output. Per batch: one gram pass
     * over the batch, the corpus-sized store semi-filtered against the
     * batch keys before any join.
     */
@@ -1494,34 +1277,24 @@ object StreamingOps {
       storePath: String,
       outPath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val prev = latestHllVersionBefore(s, storePath, batchId)
-          .map(p => s.read.parquet(p))
+  ): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val store = prev.getOrElse(
-          s.emptyDataFrame.select(lit("").as("h"), lit(0L).as("freq"),
+          batch.sparkSession.emptyDataFrame.select(lit("").as("h"), lit(0L).as("freq"),
             lit(0L).as("first_code")).limit(0))
         graft.dedup.ExactSubstr.incrementalScrub(store, batch, idCol, textCol, k)
           .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         val bs = graft.dedup.ExactSubstr.gramStore(batch, idCol, textCol, k)
-        val merged = prev match {
-          case Some(st) => graft.dedup.ExactSubstr.mergeGramStore(st, bs)
-          case None => bs
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bs)(graft.dedup.ExactSubstr.mergeGramStore(_, bs))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming Count-Min frequency fold — [[hllProfileStream]]'s
     * frequency twin. Cell-wise SUM is not idempotent (a re-merged batch
-    * would double-count), so replay safety leans entirely on the version
-    * discipline: v=<batchId> is always recomputed from the latest
-    * version strictly below it, never from itself. The standing counter
+    * would double-count), so replay safety leans entirely on
+    * [[StoreMaintenance.foldVersion]]: v=<batchId> is always recomputed
+    * from the latest version strictly below it. The standing counter
     * table stays ≤ depth·width cells regardless of history.
     */
   def cmsProfileStream(
@@ -1529,21 +1302,13 @@ object StreamingOps {
       valueCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bc = graft.operators.Sketches.cmsCounters(batch, valueCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.Sketches.mergeCms(s.read.parquet(p), bc)
-          case None => bc
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bc)(graft.operators.Sketches.mergeCms(_, bc))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming ROC-AUC — the online leg of the evaluation trio next to
     * the HLL/CMS/quantile-sketch profile folds: each micro-batch of
@@ -1552,9 +1317,8 @@ object StreamingOps {
     * so the fold over disjoint batches IS the rebuild, spec-asserted),
     * merged into a versioned store; the standing state answers "AUC so
     * far" at score-cardinality rows via `aucFromHistogram` without
-    * re-scoring history. Sum-merge is NON-idempotent ⇒ same replay
-    * discipline as the CMS fold (v=<batchId> from the latest strictly
-    * earlier version — a crash replay recomputes, never re-merges).
+    * re-scoring history. Sum-merge is NON-idempotent, so a crash replay
+    * recomputes, never re-merges: [[StoreMaintenance.foldVersion]].
     */
   def aucHistogramStream(
       rows: DataFrame,
@@ -1563,42 +1327,27 @@ object StreamingOps {
       labelCol: String,
       storePath: String,
       checkpoint: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+  ): StreamingQuery =
+    eachBatch(rows, checkpoint) { (batch, batchId) =>
+      StoreMaintenance.foldVersion(batch, batchId, storePath) { prev =>
         val bh = graft.operators.RankEval.aucHistogram(
           batch.select(col(idCol), col(scoreCol)),
           batch.select(col(idCol), col(labelCol)),
           idCol, scoreCol, labelCol)
-        val merged = latestHllVersionBefore(s, storePath, batchId) match {
-          case Some(p) => graft.operators.RankEval.mergeAucHistogram(
-            s.read.parquet(p), bh)
-          case None => bh
-        }
-        merged.write.mode("overwrite").parquet(s"$storePath/v=$batchId")
-        ()
+        prev.fold(bh)(graft.operators.RankEval.mergeAucHistogram(_, bh))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
-  /** Latest committed register version below `beforeId` (replay safety:
-    * a recomputing batch must not read its own partial output).
+  /** Runs `f` on every micro-batch of `df` until the input available at
+    * start is drained (`AvailableNow`), checkpointing to `checkpoint`.
     */
-  private[graft] def latestHllVersionBefore(
-      spark: SparkSession, storePath: String, beforeId: Long): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .filter(_ < beforeId)
-      .sorted.lastOption
-      .map(v => s"$storePath/v=$v")
-  }
+  private def eachBatch(df: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .foreachBatch(f)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   /** File-based streaming read of the events parquet, normalizing the
     * nanosecond ts (read as long under nanosAsLong) to a µs timestamp like

@@ -2,7 +2,7 @@ package graft
 
 import graft.quality.{AbDashboard, Association, BayesAb, RatioMetric, SequentialTests}
 import graft.queries.CoreQueries
-import graft.streaming.StreamingOps
+import graft.streaming.{StoreMaintenance, StreamingOps}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +61,7 @@ class AbDashboardSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.abCellsStream(rows, "arm", "peek", "y", "x", "hit",
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val store = spark.read.parquet(latest)
     val rebuilt = cellsOf(toDf(b1 ++ b2))
     assert(store.orderBy("arm", "peek").collect().toSeq ==
@@ -280,7 +280,7 @@ class AbDashboardSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.scorecardCellsStream(rows, "arm", "peek", Seq("ma", "mb"),
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val store = spark.read.parquet(latest)
     val rebuilt = AbDashboard.scorecardCells(
       (b1 ++ b2).toDF("unit", "arm", "peek", "ma", "mb"), "arm", "peek", Seq("ma", "mb"))
@@ -427,7 +427,7 @@ class AbDashboardSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.abCells2Stream(rows, "arm", "peek", "y", "x1", "x2", "hit",
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val store = spark.read.parquet(latest)
     val all = (b1 ++ b2).toDF("unit", "arm", "peek", "y", "x1", "x2", "hit")
     val rebuilt = AbDashboard.abCells2(all, "arm", "peek", "y", "x1", "x2", "hit")

@@ -249,7 +249,7 @@ class CoreOperatorsSpec extends SparkSpec {
     }
     info(s"validateCombinations: $searchJobs Spark jobs")
     assert(keys == Seq(Seq("o_orderkey")))
-    assert(searchJobs <= 5, s"$searchJobs jobs")
+    assert(searchJobs <= 4, s"$searchJobs jobs")
     val (v, candidateJobs) = JobCount(spark)(PrimaryKey.validateCandidate(li, Seq("l_orderkey")))
     info(s"validateCandidate: $candidateJobs Spark jobs")
     assert(v.recordCount == 6000L && !v.isValid)

@@ -17,7 +17,7 @@ class StoreCatalogSpec extends SparkSpec {
     val defs = "def (\\w+)\\(([^)]*)\\)".r.findAllMatchIn(src)
       .filter(m => m.group(2).contains("storePath:") ||
         m.group(2).contains("assignPath:"))
-      .map(_.group(1)).toSet - "latestHllVersionBefore" // a reader, not a fold
+      .map(_.group(1)).toSet
     // exact identifier-set membership, not substring containment: a
     // future fold whose name is a substring of a cataloged fold string
     // (e.g. `clusterStream` vs `semanticClusterStream`) must NOT pass
@@ -34,7 +34,7 @@ class StoreCatalogSpec extends SparkSpec {
     for (f <- StoreCatalog.All)
       assert(f.layout.prunePath.nonEmpty, f.name)
     val layouts = StoreCatalog.All.map(_.layout).distinct
-    assert(layouts.size === 5, s"layouts present: $layouts")
+    assert(layouts.size === 6, s"layouts present: $layouts")
     assert(StoreCatalog.All.size >= 26)
     // names are unique (the SURVEY §8 table keys on them)
     assert(StoreCatalog.All.map(_.name).distinct.size === StoreCatalog.All.size)
@@ -72,20 +72,25 @@ class StoreCatalogSpec extends SparkSpec {
     for ((b, v) <- Seq((0L, 1L), (0L, 4L), (0L, 9L), (2L, 3L)))
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(s"$tmp/spans/bucket=$b/v=$v"))
+    // an append-partitioned BM25 store: every batch partition is live data
+    val bm25Dirs = for (part <- Seq("postings", "stats"); b <- 0 to 2)
+      yield java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$tmp/bm25/$part/batch_id=$b"))
     val pruned = StoreMaintenance.sweep(spark,
       Map("bucket-counts" -> s"$tmp/bc", "span-store" -> s"$tmp/spans",
-        "ann-indexes" -> s"$tmp/ann"), keepLast = 2)
+        "ann-indexes" -> s"$tmp/ann", "bm25-postings" -> s"$tmp/bm25"), keepLast = 2)
     assert(pruned("bucket-counts") === 1L) // v of batch 0 reclaimed
     assert(pruned("span-store") === 1L)    // bucket 0's oldest
     assert(pruned("ann-indexes") === 0L)   // frozen snapshot: no-op
+    assert(pruned("bm25-postings") === 0L) // append partitions: nothing to prune
+    assert(bm25Dirs.forall(java.nio.file.Files.isDirectory(_)))
     assert(StoreMaintenance.versions(spark, s"$tmp/bc").size === 2)
     assert(StoreMaintenance.bucketVersions(spark, s"$tmp/spans") ===
       Map(0L -> Seq(4L, 9L), 2L -> Seq(3L)))
     // the swept store still satisfies fold == rebuild on the NEXT batch
     val b4 = Seq(2L, 9L, 9L)
     batch(b4)
-    val latest = graft.streaming.StreamingOps
-      .latestHllVersionBefore(spark, s"$tmp/bc", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/bc", Long.MaxValue).get
     val folded = spark.read.parquet(latest)
     val rebuilt = graft.quality.Profiler.bucketCounts(
       (b1 ++ b2 ++ b3 ++ b4).toDF("v"), "v")
@@ -95,6 +100,39 @@ class StoreCatalogSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       StoreMaintenance.sweep(spark, Map("no-such-family" -> tmp))
     }
+  }
+
+  test("foldVersion replay: a batch re-run after a crash before its commit recomputes its own version") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    // a parquet file source (one file per batch), so the restarted query
+    // replays the uncommitted batch over the same offsets
+    val batches = Seq(Seq(1L, 2L, 2L, 3L), Seq(2L, 5L, 5L), Seq(1L, 7L))
+    for (b <- batches) b.toDF("v").coalesce(1).write.mode("append").parquet(s"$tmp/in")
+    val rows = graft.streaming.StreamingOps.readFileStream(
+      spark, s"$tmp/in", spark.read.parquet(s"$tmp/in").schema, maxFilesPerTrigger = Some(1))
+    def run(): Unit = graft.streaming.StreamingOps.bucketCountsStream(
+      rows, "v", s"$tmp/bc", s"$tmp/cp").awaitTermination(120000)
+    def version(v: Long) =
+      spark.read.parquet(s"$tmp/bc/v=$v").orderBy("bucket").collect().toSeq
+    run()
+    assert(StoreMaintenance.versions(spark, s"$tmp/bc") === Seq(0L, 1L, 2L))
+    val v1 = version(1)
+    // crash after batch 2's write and before its commit: v=2 holds rows
+    // no fold produced, and the commit marker is missing
+    Seq((-1L, 1000L)).toDF("bucket", "cnt")
+      .write.mode("overwrite").parquet(s"$tmp/bc/v=2")
+    for (f <- Seq("2", ".2.crc"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$tmp/cp/commits/$f"))
+    run()
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/cp/commits/2")))
+    assert(StoreMaintenance.versions(spark, s"$tmp/bc") === Seq(0L, 1L, 2L))
+    val rebuilt = graft.quality.Profiler.bucketCounts(batches.flatten.toDF("v"), "v")
+      .orderBy("bucket").collect().toSeq
+    // equal to the rebuild, so neither the garbage bucket -1 nor a double
+    // count of batch 2 reached it: the fold read v=1, never its own v=2
+    assert(version(2) === rebuilt)
+    assert(version(1) === v1)
   }
 
   test("pruneBucketVersions reclaims per-bucket history independently") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.SparkPipeline
-import graft.streaming.StreamingOps
+import graft.streaming.{StoreMaintenance, StreamingOps}
 import graft.streaming.StreamingOps.{Event, Session}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -356,7 +356,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b3: _*)
     StreamingOps.hllProfileStream(rows, Seq("g"), "v", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest)
       .orderBy("g", "bucket").collect().toSeq
     val rebuilt = Sketches.hllRegisters(
@@ -390,7 +390,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.quantileSketchStream(rows, Seq("g"), "v", Seq("id"), 64,
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest)
       .orderBy("g", "h").collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
     val rebuilt = Sketches.quantileSketch(
@@ -417,7 +417,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.spearmanSketchStream(rows, Seq("g"), "x", "y", Seq("id"), 64,
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     def canon(d: org.apache.spark.sql.DataFrame) = d.orderBy("g", "h").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     val folded = canon(spark.read.parquet(latest).select("g", "h", "x", "y"))
@@ -451,7 +451,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.aucHistogramStream(rows, "id", "score", "label",
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val hist = spark.read.parquet(latest)
     val all = (b1 ++ b2).toDF("id", "score", "label")
     // folded histogram == rebuild, and the AUC row is bit-identical
@@ -475,7 +475,7 @@ class StreamingSpec extends SparkSpec {
     assert(pruned == Seq(0L))
     assert(StoreMaintenance.versions(spark, s"$tmp/store") == Seq(3L, 7L))
     // the fold's version resolution still works after pruning
-    assert(StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue)
+    assert(StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue)
       .get.endsWith("v=7"))
     // idempotent; and a missing store is an empty report, not an error
     assert(StoreMaintenance.pruneVersions(spark, s"$tmp/store", 2).isEmpty)
@@ -680,7 +680,7 @@ class StreamingSpec extends SparkSpec {
     assert(b1(3L) == "prefix suffix", s"got ${b1(3L)}")
     assert(b1(4L) == "wholly novel words")
     // the folded store equals the rebuild over both batches
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("h").collect().toSeq
     val all = Seq((1L, s"$boiler alpha"),
       (2L, "clean text only here nothing repeats at all"),
@@ -707,7 +707,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.cmsProfileStream(rows, "token", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("j", "bucket").collect().toSeq
     val rebuilt = Sketches.cmsCounters((b1 ++ b2).toDF("token"), "token")
       .orderBy("j", "bucket").collect().toSeq
@@ -736,7 +736,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.contingencyStream(rows, Seq("src"), "xc", "yc", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("src", "x", "y").collect().toSeq
     val rebuilt = Association.contingencyCounts(
       (b1 ++ b2).toDF("src", "xc", "yc"), Seq("src"), "xc", "yc")
@@ -769,7 +769,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.tokenCountsStream(rows, Seq("lang"), "text", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("lang", "token").collect().toSeq
     val rebuilt = CorpusLaws.groupedTokenCounts(
       (b1 ++ b2).toDF("lang", "text"), Seq("lang"), "text")
@@ -810,7 +810,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.rankCellsStream(rows, Nil, "g", "v0", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("grp", "v").collect().toSeq
     val all = (b1 ++ b2).toDF("g", "v0")
     val rebuilt = Association.rankCells(all, Nil, "g", "v0")
@@ -842,7 +842,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.valueCellsStream(rows, Seq("g"), "v0", s"$tmp/store", s"$tmp/cp",
       weightCol = Some("w0")).awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("g", "v").collect().toSeq
     val all = (b1 ++ b2).toDF("g", "v0", "w0")
     val rebuilt = Quantiles.valueCells(all, Seq("g"), "v0", Some("w0"))
@@ -878,7 +878,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.valueCountsStream(rows, "v", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val all = (b1 ++ b2).toDF("v")
     val folded = spark.read.parquet(latest).orderBy("value").collect().toSeq
     val rebuilt = Profiler.valueCounts(all, "v").orderBy("value").collect().toSeq
@@ -916,7 +916,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.kendallCellsStream(rows, Seq("g"), "xv", "yv", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("g", "x", "y").collect().toSeq
     val rebuilt = Association.kendallCells(
       (b1 ++ b2).toDF("g", "xv", "yv"), Seq("g"), "xv", "yv")
@@ -946,7 +946,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.bucketCountsStream(rows, "v", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest).orderBy("bucket").collect().toSeq
     val rebuilt = Profiler.bucketCounts((b1 ++ b2).map(Tuple1(_)).toDF("v"), "v")
       .orderBy("bucket").collect().toSeq
@@ -975,7 +975,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.seasonalStatsStream(rows, Seq("g"), "ph", "x", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val all = (b1 ++ b2).toDF("g", "ph", "x")
     val folded = spark.read.parquet(latest).orderBy("g", "ph").collect().toSeq
     val rebuilt = TimeSeries.seasonalStats(all, Seq("g"), "ph", "x")
@@ -1008,7 +1008,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.weightedSampleStream(rows, Seq("g"), Seq("id"), "w", 10,
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val folded = spark.read.parquet(latest)
       .orderBy("g", "rank").collect().toSeq
     val rebuilt = Sampling.weightedSampleWithoutReplacement(
@@ -1036,7 +1036,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.slotCountsStream(rows, Seq("g"), "ts", s"$tmp/store", s"$tmp/cp")
       .awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val all = (b1 ++ b2).toDF("g", "s")
       .withColumn("ts", col("s").cast("timestamp")).drop("s")
     val standing = TimeSeries.densifyCounts(spark.read.parquet(latest), Seq("g"))
@@ -1332,7 +1332,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.lifetimeCellsStream(rows, Seq("g"), "dur", "ev",
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val store = spark.read.parquet(latest)
     val all = (b1 ++ b2).toDF("g", "dur", "ev")
     val rebuilt = Survival.lifetimeCells(all, Seq("g"), "dur", "ev")

@@ -913,7 +913,7 @@ class TrendStatsSpec extends SparkSpec {
 
   test("paired-diff cells: fold == rebuild; the streaming store answers both matched tests") {
     import graft.quality.Association
-    import graft.streaming.StreamingOps
+    import graft.streaming.{StoreMaintenance, StreamingOps}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mk = (n: Int, seed: Int) => (0 until n).map { i =>
@@ -938,7 +938,7 @@ class TrendStatsSpec extends SparkSpec {
     mem.addData(b2: _*)
     StreamingOps.pairedDiffCellsStream(rows, "x", "y",
       s"$tmp/store", s"$tmp/cp").awaitTermination(120000)
-    val latest = StreamingOps.latestHllVersionBefore(spark, s"$tmp/store", Long.MaxValue).get
+    val latest = StoreMaintenance.latestBefore(spark, s"$tmp/store", Long.MaxValue).get
     val store = spark.read.parquet(latest)
     assert(store.orderBy("d").collect().toSeq ===
       rebuilt.orderBy("d").collect().toSeq)
