@@ -198,9 +198,8 @@ final class BucketedAssignStore(path: String, numBuckets: Int)
               // only through the first action — but the fallback's inputs
               // are persisted frames we unpersist in finally, so cut the
               // lineage here
-              val content = carry
-                .unionByName(resolved.select("node", "component", "bucket"))
-                .localCheckpoint()
+              val content = graft.plans.Lineage.truncate(carry
+                .unionByName(resolved.select("node", "component", "bucket")))
               Some((content, affected, vmap))
             }
           } finally { touchedComps.unpersist(blocking = false); () }

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.plans.{Lineage, Local, LongUnionFind}
+
 /** Connected components over a pair/edge list — the step that turns
   * near-duplicate PAIRS into duplicate CLUSTERS (keep one representative
   * per component).
@@ -25,62 +27,24 @@ import org.apache.spark.sql.functions._
   * component = min reachable node.
   *
   * Scale notes: each round is two shuffled joins + one aggregation;
-  * `localCheckpoint` cuts the lineage every round so plans don't grow
-  * exponentially; convergence is detected with a changed-label metric
-  * OBSERVED during the checkpoint's own materialization job
-  * (`Dataset.observe`) — one Spark job per round, where a separate
-  * changed-count probe would double the per-round scheduling latency
-  * that dominates small-round iterative queries.
+  * [[graft.plans.Lineage.truncate]] cuts the lineage every round so
+  * plans don't grow exponentially; convergence is detected with a
+  * changed-label metric OBSERVED during the checkpoint's own
+  * materialization job (`Dataset.observe`) — one Spark job per round,
+  * where a separate changed-count probe would double the per-round
+  * scheduling latency that dominates small-round iterative queries.
   */
 object ConnectedComponents {
-
-  /** Frees the executor blocks behind a `localCheckpoint`ed DataFrame.
-    * `Dataset.unpersist()` cannot do this — checkpoint data lives as RDD
-    * storage blocks (not CacheManager entries), so without an explicit
-    * RDD-level unpersist every round's blocks linger until GC.
-    */
-  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** The shared driver-solve bound: an edge set of at most this many
-    * rows is solved on the driver instead of by an iterative chain of
-    * Spark jobs. Every driver twin in graft — [[labelPropagation]], the
-    * threshold sweep, the incremental fold and
-    * [[graft.graph.PageRank]]'s walk — uses this one bound and reads its
-    * edges through [[collectLocal]]. 2^20 (src, dst) rows are on the
-    * order of 100 MB as driver Row objects; below that size the per-round
-    * scheduling latency of the distributed loop, not the edge work, is
-    * the cost.
-    */
-  private[graft] val LocalEdgeBound: Int = 1 << 20
-
-  /** The one bounded collect behind every driver twin: the rows of `df`,
-    * or None when `max` is not positive, the frame holds more than `max`
-    * rows, or any value is NULL — the caller then falls back to its
-    * distributed loop, which owns the semantics (NULL join keys are
-    * tolerated there). `limit(max + 1)` bounds the collect BEFORE the rows
-    * reach the driver: CollectLimit stops after the first partitions when
-    * the frame is huge.
-    */
-  private[graft] def collectLocal(df: DataFrame, max: Int): Option[Array[Row]] = {
-    if (max <= 0) return None
-    val rows = df.limit(max + 1).collect()
-    if (rows.length > max || rows.exists(_.anyNull)) None
-    else Some(rows)
-  }
 
   /** @param edges DataFrame with columns (src, dst) — undirected.
     * @param localEdgeThreshold edge sets at most this large are solved by
     *        ONE driver union-find instead of the iterative distributed
-    *        propagation (0 disables; default [[LocalEdgeBound]]). Near-dup
-    *        edge sets are tiny relative to the corpus they came from —
-    *        blocking emits pairs, not rows — so at micro-batch and
+    *        propagation (0 disables; default [[graft.plans.Local.Bound]]).
+    *        Near-dup edge sets are tiny relative to the corpus they came
+    *        from — blocking emits pairs, not rows — so at micro-batch and
     *        per-query scale the O(log diameter) round chain is pure
-    *        scheduling latency; the probe pays one [[collectLocal]] and
-    *        falls back when the set is over the bound.
+    *        scheduling latency; the probe pays one [[graft.plans.Local.rows]]
+    *        and falls back when the set is over the bound.
     * @return (node, component) where component = min node id reachable.
     *         Distributed results are materialized (checkpointed); local
     *         ones are a LocalRelation — deterministic and free to branch.
@@ -88,66 +52,44 @@ object ConnectedComponents {
   def labelPropagation(
       edges: DataFrame,
       maxIter: Int = 20,
-      localEdgeThreshold: Int = LocalEdgeBound
+      localEdgeThreshold: Int = Local.Bound
   ): DataFrame =
     localLabelPropagation(edges, localEdgeThreshold)
       .getOrElse(distributedLabelPropagation(edges, maxIter))
 
   /** Driver union-find twin of the propagation loop: same fixpoint
     * (component = min reachable node id), zero Spark jobs after the edge
-    * collect. Bails (None) on oversized edge sets, non-long id columns,
-    * or NULL endpoints — the distributed loop is the semantics owner.
+    * collect. Bails (None) where [[graft.plans.Local.rows]] does (an
+    * oversized edge set, a NULL endpoint) and on non-long id columns —
+    * the distributed loop is the semantics owner.
     */
   private def localLabelPropagation(
       edges: DataFrame,
       localEdgeThreshold: Int
   ): Option[DataFrame] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val longIds = Seq(edges.schema.fields.find(_.name == "src"),
-        edges.schema.fields.find(_.name == "dst"))
-      .forall(_.exists(_.dataType == LongType))
-    if (!longIds) return None
-    val rows = collectLocal(edges.select(col("src"), col("dst")), localEdgeThreshold) match {
-      case Some(r) => r
-      case None => return None
+    if (!Local.longCols(edges, "src", "dst")) return None
+    Local.rows(edges.select(col("src"), col("dst")), localEdgeThreshold).map { rows =>
+      val uf = new LongUnionFind
+      rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+      val out = uf.ids.toSeq.map(k => Row(k, uf.find(k)))
+      Local.frame(edges.sparkSession, out, StructType(Seq(
+        StructField("node", LongType, nullable = false),
+        StructField("component", LongType, nullable = false))))
     }
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    rows.foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    // Rows + a StructType, not toDF on tuples: no reflection encoder
-    val out = new java.util.ArrayList[Row](parent.size)
-    parent.keys.toArray.foreach(k => out.add(Row(k, find(k))))
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("component", LongType, nullable = false)))
-    Some(edges.sparkSession.createDataFrame(out, schema))
   }
 
   private def distributedLabelPropagation(edges: DataFrame, maxIter: Int): DataFrame = {
     // materialized once: every round joins against it, and without the
     // checkpoint each iteration would re-scan + re-distinct the edge source
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = Lineage.truncate(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     try {
       // ckpt = the round's materialized checkpoint (freed next round);
       // labels = the user-facing view of it
-      var ckpt = sym.select(col("src").as("node")).distinct()
-        .withColumn("component", col("node"))
-        .localCheckpoint()
+      var ckpt = Lineage.truncate(sym.select(col("src").as("node")).distinct()
+        .withColumn("component", col("node")))
       var labels = ckpt
       var converged = false
       var iter = 0
@@ -171,7 +113,8 @@ object ConnectedComponents {
         // the convergence signal rides the checkpoint's OWN
         // materialization job via observe() — no separate probe job
         val obs = org.apache.spark.sql.Observation(s"cc_round_$iter")
-        val updated = afterNbr.join(
+        // eager: materialized here, prior round now free-able
+        val updated = Lineage.truncate(afterNbr.join(
             labels.select(col("node").as("component"), col("component").as("__parent")),
             Seq("component"), "left")
           .select(
@@ -181,17 +124,16 @@ object ConnectedComponents {
           )
           .withColumn("__changed", col("component") < col("__old"))
           .drop("__old")
-          .observe(obs, sum(col("__changed").cast("long")).as("n_changed"))
-          .localCheckpoint() // eager: materialized here, prior round now free-able
+          .observe(obs, sum(col("__changed").cast("long")).as("n_changed")))
         val changed = obs.get.get("n_changed").collect { case l: Long => l }.getOrElse(0L)
-        freeLocalCheckpoint(ckpt)
+        Lineage.free(ckpt)
         ckpt = updated
         labels = updated.drop("__changed")
         converged = changed == 0
         iter += 1
       }
       labels
-    } finally freeLocalCheckpoint(sym)
+    } finally Lineage.free(sym)
   }
 
   /** Cluster summary: representative (min id) + member count per component. */
@@ -240,8 +182,9 @@ object ConnectedComponents {
     * per threshold: the pair frame collapses to per-(src, dst) MIN
     * distance (one aggregation — a pair is "in" at t iff its min dist
     * is), the distinct pairs are collected (bounded by the blocking
-    * contract, same `localEdgeThreshold` bound as [[labelPropagation]]'s
-    * driver path, which these gate-scale pair sets already ride) and
+    * contract and by `localPairThreshold`, default the one driver bound
+    * [[graft.plans.Local.Bound]] that [[labelPropagation]]'s driver path
+    * uses, which these gate-scale pair sets already ride) and
     * processed in ascending-dist order; every threshold's
     * (pairs, nodes, clusters) snapshot falls out of the running
     * union-find counters. Oversized pair sets fall back to one
@@ -255,7 +198,7 @@ object ConnectedComponents {
       dstCol: String,
       distCol: String,
       thresholds: Seq[Int],
-      localPairThreshold: Int = LocalEdgeBound
+      localPairThreshold: Int = Local.Bound
   ): DataFrame = {
     require(thresholds.nonEmpty, "need at least one threshold")
     val grouped = pairs
@@ -267,59 +210,38 @@ object ConnectedComponents {
   }
 
   /** The single-pass driver sweep over collected (src, dst, min dist)
-    * rows. Bails (None) on oversized pair sets or non-long id columns —
-    * the per-threshold distributed loop is the semantics owner.
+    * rows: the running (nodes, clusters) counters of one
+    * [[graft.plans.LongUnionFind]]. Bails (None) where
+    * [[graft.plans.Local.rows]] does and on non-long id columns — the
+    * per-threshold distributed loop is the semantics owner.
     */
   private def localThresholdSweep(
       grouped: DataFrame,
       thresholds: Seq[Int],
       localPairThreshold: Int
   ): Option[DataFrame] = {
-    import org.apache.spark.sql.types.LongType
-    val longIds = Seq(grouped.schema.fields.find(_.name == "src"),
-        grouped.schema.fields.find(_.name == "dst"))
-      .forall(_.exists(_.dataType == LongType))
-    if (!longIds) return None
+    if (!Local.longCols(grouped, "src", "dst")) return None
     val spark = grouped.sparkSession
     import spark.implicits._
-    val rows = collectLocal(grouped, localPairThreshold) match {
-      case Some(r) => r
-      case None => return None
-    }
-    val edges = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(e => (e._3, e._1, e._2))
-    // incremental union-find with running node/component counters
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    var nNodes = 0L
-    var nClusters = 0L
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def touch(x: Long): Unit =
-      if (!parent.contains(x)) { parent(x) = x; nNodes += 1; nClusters += 1 }
-    var i = 0
-    val out = thresholds.sorted.map { t =>
-      while (i < edges.length && edges(i)._3 <= t.toDouble) {
-        val (s, d, _) = edges(i)
-        touch(s); touch(d)
-        val rs = find(s); val rd = find(d)
-        if (rs != rd) {
-          if (rs < rd) parent(rd) = rs else parent(rs) = rd
-          nClusters -= 1
+    Local.rows(grouped, localPairThreshold).map { rows =>
+      val edges = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(e => (e._3, e._1, e._2))
+      val uf = new LongUnionFind
+      var i = 0
+      val out = thresholds.sorted.map { t =>
+        while (i < edges.length && edges(i)._3 <= t.toDouble) {
+          uf.union(edges(i)._1, edges(i)._2)
+          i += 1
         }
-        i += 1
+        val (nNodes, nClusters) = (uf.nodes, uf.clusters)
+        val dup = if (nNodes > 0L) (nNodes - nClusters).toDouble / nNodes.toDouble else 0d
+        (t, i.toLong, nNodes, nClusters, dup)
       }
-      val dup = if (nNodes > 0L) (nNodes - nClusters).toDouble / nNodes.toDouble else 0d
-      (t, i.toLong, nNodes, nClusters, dup)
+      // ascending snapshots re-ordered to the caller's threshold order
+      val byT = out.map(r => r._1 -> r).toMap
+      thresholds.map(byT)
+        .toDF("threshold", "n_pairs", "n_nodes", "n_clusters", "dup_factor")
     }
-    // ascending snapshots re-ordered to the caller's threshold order
-    val byT = out.map(r => r._1 -> r).toMap
-    Some(thresholds.map(byT)
-      .toDF("threshold", "n_pairs", "n_nodes", "n_clusters", "dup_factor"))
   }
 
   /** Prefix of the job tag each threshold of [[distributedThresholdSweep]]
@@ -349,7 +271,7 @@ object ConnectedComponents {
     val spark = grouped.sparkSession
     val sc = spark.sparkContext
     import spark.implicits._
-    val ckpt = grouped.localCheckpoint()
+    val ckpt = Lineage.truncate(grouped)
     try {
       // the per-threshold clusterings are INDEPENDENT jobs over the one
       // checkpointed frame — overlap them from a small thread pool so a
@@ -399,7 +321,7 @@ object ConnectedComponents {
           }
         } finally pool.shutdown()
       out.toDF("threshold", "n_pairs", "n_nodes", "n_clusters", "dup_factor")
-    } finally freeLocalCheckpoint(ckpt)
+    } finally Lineage.free(ckpt)
   }
 
   /** Fold NEW edges into an existing (node, component) assignment without
@@ -450,7 +372,7 @@ object ConnectedComponents {
       newEdges: DataFrame,
       maxIter: Int = 20,
       broadcastBatch: Boolean = true,
-      maxLocalEdges: Int = LocalEdgeBound
+      maxLocalEdges: Int = Local.Bound
   ): (DataFrame, DataFrame) =
     localResolve(assign, newEdges, broadcastBatch, maxLocalEdges)
       .getOrElse(distributedResolve(assign, newEdges, maxIter, broadcastBatch))
@@ -459,17 +381,18 @@ object ConnectedComponents {
     * assignment): the only graph that needs SOLVING is the batch edges
     * CONTRACTED over the old assignment — each endpoint replaced by its
     * old component id (itself when unassigned) — which is batch-sized by
-    * construction. That graph is union-found ON THE DRIVER (bounded by
-    * `maxLocalEdges`, the same batch-is-small bound the broadcast hints
-    * assert; min-id roots preserve min-label semantics because old
-    * component ids ARE min member ids), and the merged mapping
-    * broadcast-joins back over the touched members — so a fold is ONE
-    * distributed pass with no wide exchange, instead of an O(log
-    * diameter) chain of pointer-jumping jobs whose per-round scheduling
-    * latency dominates at micro-batch sizes. Falls back to
+    * construction. That graph is union-found ON THE DRIVER (one
+    * [[graft.plans.LongUnionFind]] over the [[graft.plans.Local.rows]] of
+    * the batch, bounded by `maxLocalEdges`, the same batch-is-small bound
+    * the broadcast hints assert; min-id roots preserve min-label
+    * semantics because old component ids ARE min member ids), and the
+    * merged mapping broadcast-joins back over the touched members — so a
+    * fold is ONE distributed pass with no wide exchange, instead of an
+    * O(log diameter) chain of pointer-jumping jobs whose per-round
+    * scheduling latency dominates at micro-batch sizes. Falls back to
     * [[distributedResolve]] for oversized batches (`broadcastBatch =
-    * false` or more than `maxLocalEdges` edges) and for non-long id
-    * columns.
+    * false`, more than `maxLocalEdges` edges or a NULL endpoint) and for
+    * non-long id columns.
     */
   private def localResolve(
       assign: DataFrame,
@@ -477,16 +400,12 @@ object ConnectedComponents {
       broadcastBatch: Boolean,
       maxLocalEdges: Int
   ): Option[(DataFrame, DataFrame)] = {
-    import org.apache.spark.sql.types.LongType
-    val longIds = Seq(assign.schema.fields.find(_.name == "node"),
-        assign.schema.fields.find(_.name == "component"),
-        newEdges.schema.fields.find(_.name == "src"),
-        newEdges.schema.fields.find(_.name == "dst"))
-      .forall(_.exists(_.dataType == LongType))
+    val longIds = Local.longCols(assign, "node", "component") &&
+      Local.longCols(newEdges, "src", "dst")
     if (!broadcastBatch || !longIds) return None
     val spark = assign.sparkSession
     import spark.implicits._
-    val pairs = collectLocal(newEdges.select(col("src"), col("dst")), maxLocalEdges) match {
+    val pairs = Local.rows(newEdges.select(col("src"), col("dst")), maxLocalEdges) match {
       case Some(rows) => rows.map(r => (r.getLong(0), r.getLong(1)))
       case None => return None
     }
@@ -498,23 +417,10 @@ object ConnectedComponents {
       .select(col("node"), col("component"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // union-find with min-id roots over contracted keys
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val uf = new LongUnionFind
     def key(n: Long): Long = endpointAssign.getOrElse(n, n)
-    pairs.foreach { case (s, d) => union(key(s), key(d)) }
-    val rootOf = parent.keys.map(k => k -> find(k)).toMap
+    pairs.foreach { case (s, d) => uf.union(key(s), key(d)) }
+    val rootOf = uf.ids.map(k => k -> uf.find(k)).toMap
     val touchedComps = endpointAssign.values.toSeq.distinct.toDF("component")
     val mapping = rootOf.toSeq.toDF("component", "__newc")
     val fresh = endpoints.filterNot(endpointAssign.contains)

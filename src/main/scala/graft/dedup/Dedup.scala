@@ -322,9 +322,9 @@ object MinHashLsh {
     * signature positions, filtered to >= minJaccard.
     *
     * Scale shape: a corpus whose (band, bh, id) rows fit
-    * [[ConnectedComponents.LocalEdgeBound]] — at most `LocalEdgeBound /
-    * bands` signed documents — is blocked on the driver: ONE bounded
-    * [[ConnectedComponents.collectLocal]] of (id, sig, band hashes), the
+    * [[graft.plans.Local.Bound]] — at most `Local.Bound / bands` signed
+    * documents — is blocked on the driver: ONE bounded
+    * [[graft.plans.Local.rows]] of (id, sig, band hashes), the
     * band hashes taken by the same `xxhash64(slice(sig, …))` expression
     * the distributed path groups on, then buckets of 2 to `maxBucketSize`
     * ids, pair dedup and the estimate filter in driver memory, returned as
@@ -347,7 +347,7 @@ object MinHashLsh {
       persistSignatures: Boolean = true
   ): DataFrame =
     boundedCandidatePairs(df, idCol, textCol, k, numHashes, bands, minJaccard, maxBucketSize,
-      seed, persistSignatures, ConnectedComponents.LocalEdgeBound / bands)
+      seed, persistSignatures, graft.plans.Local.Bound / bands)
 
   /** [[candidatePairs]] with the driver twin's row bound explicit (0 =
     * always distributed).
@@ -386,10 +386,11 @@ object MinHashLsh {
   ): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    if (sigs.schema(idCol).dataType != LongType) return None
+    import graft.plans.Local
+    if (!Local.longCols(sigs, idCol)) return None
     val r = numHashes / bands
     val bandHashes = (0 until bands).map(j => xxhash64(slice(col("sig"), j * r + 1, r)))
-    val rows = ConnectedComponents.collectLocal(
+    val rows = Local.rows(
         sigs.select(col(idCol) +: col("sig") +: bandHashes: _*), localRowBound) match {
       case Some(rs) => rs
       case None => return None
@@ -412,19 +413,18 @@ object MinHashLsh {
         }
       }
     }
-    val out = new java.util.ArrayList[Row]()
-    pairs.toArray.sorted.foreach { p =>
+    val out = pairs.toArray.sorted.toSeq.flatMap { p =>
       val (u, v) = ((p >>> 32).toInt, p.toInt)
       var eq = 0; var h = 0
       while (h < numHashes) { if (sig(u)(h) == sig(v)(h)) eq += 1; h += 1 }
       val est = eq.toDouble / numHashes
-      if (est >= minJaccard) out.add(Row(ids(u), ids(v), est))
+      if (est >= minJaccard) Some(Row(ids(u), ids(v), est)) else None
     }
     val schema = StructType(Seq(
       StructField("id_a", LongType, nullable = false),
       StructField("id_b", LongType, nullable = false),
       StructField("est_jaccard", DoubleType, nullable = false)))
-    Some(sigs.sparkSession.createDataFrame(out, schema))
+    Some(Local.frame(sigs.sparkSession, out, schema))
   }
 
   private def distributedCandidatePairs(

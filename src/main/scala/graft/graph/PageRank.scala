@@ -3,8 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.ConnectedComponents
-import graft.plans.Lineage
+import graft.plans.{Lineage, Local}
 
 /** Deterministic PageRank (Brin & Page 1998) in exact integer
   * arithmetic — the graph-centrality scorer web-curation pipelines use
@@ -27,8 +26,8 @@ import graft.plans.Lineage
   *
   * Scale shape: two loops compute the same recurrence.
   *  - The DRIVER TWIN runs whenever the distinct edge set fits the
-  *    shared driver bound (`ConnectedComponents.LocalEdgeBound`, 2^20
-  *    edges — the bound `labelPropagation` uses). One bounded collect
+  *    one driver bound ([[graft.plans.Local.Bound]], 2^20 edges — the
+  *    bound `labelPropagation` uses). One [[graft.plans.Local.rows]]
   *    of the distinct (src, dst) pairs (and one of the seeds) maps the
   *    nodes to dense array indices, the walk runs over arrays on the
   *    driver, and the result is a LocalRelation. Because integer sums
@@ -114,7 +113,7 @@ object PageRank {
       scale: Long,
       dampNum: Long,
       dampDen: Long,
-      localEdgeBound: Int = ConnectedComponents.LocalEdgeBound
+      localEdgeBound: Int = Local.Bound
   ): DataFrame = {
     require(iters >= 0 && iters <= 50, s"iters out of range: $iters")
     require(scale > 0 && dampNum > 0 && dampDen >= dampNum,
@@ -131,9 +130,9 @@ object PageRank {
     // persist() in its place measured a 2x slower walk phase on the
     // fallback at sf0.1, 4 cores; the checkpoint keeps the plan's own
     // statistics.)
-    val shared = e0.localCheckpoint(eager = false)
+    val shared = Lineage.truncate(e0, eager = false)
     localRankLoop(shared, seedsOpt, iters, scale, dampNum, dampDen, localEdgeBound) match {
-      case Some(local) => ConnectedComponents.freeLocalCheckpoint(shared); local
+      case Some(local) => Lineage.free(shared); local
       case None =>
         distributedRankLoop(shared, seedsOpt, iters, scale, dampNum, dampDen, sharedEdges = true)
     }
@@ -176,14 +175,14 @@ object PageRank {
   ): Option[DataFrame] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val Array(srcField, dstField) = e0.schema.fields
-    val rows = ConnectedComponents.collectLocal(e0, localEdgeBound) match {
+    val rows = Local.rows(e0, localEdgeBound) match {
       case Some(r) => r
       case None => return None
     }
     val seedSet = seedsOpt match {
       case None => None
       case Some(s) =>
-        ConnectedComponents.collectLocal(s.select(col("node")).distinct(), localEdgeBound) match {
+        Local.rows(s.select(col("node")).distinct(), localEdgeBound) match {
           case Some(seedRows) => Some(seedRows.map(_.get(0)).toSet[Any])
           case None => return None
         }
@@ -214,9 +213,7 @@ object PageRank {
     val schema = StructType(Seq(
       StructField("node", srcField.dataType, srcField.nullable || dstField.nullable),
       StructField("r", LongType, nullable = false)))
-    val out = new java.util.ArrayList[Row](n)
-    (0 until n).foreach(i => out.add(Row(ids(i), rank(i))))
-    Some(e0.sparkSession.createDataFrame(out, schema))
+    Some(Local.frame(e0.sparkSession, (0 until n).map(i => Row(ids(i), rank(i))), schema))
   }
 
   /** The distributed loop over the distinct edge set `e0`; with
@@ -243,28 +240,27 @@ object PageRank {
     //    own (0.8 s/iter), and at a scale where the rank frame outgrows
     //    the broadcast threshold it degrades to a shuffle join — the
     //    correct behavior a forced broadcast() hint would break.
-    // The edge frame IS localCheckpoint'ed: it cuts the caller's
-    // (possibly expensive) edge-generation lineage once, and it only
-    // ever sits on the probe side.
+    // The edge frame IS checkpointed (Lineage.truncate): it cuts the
+    // caller's (possibly expensive) edge-generation lineage once, and it
+    // only ever sits on the probe side.
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the out-degree fuses into the edge frame ONCE — each iteration is
     // then a single rank join + one aggregation over (dst, contribution)
     val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // Lay the fused edge/outdeg frame out by src ONCE — hash-partitioned
-    // AND sorted within partitions — before the checkpoint (r18):
-    // localCheckpoint preserves the physical partitioning/ordering on
-    // the LogicalRDD, so every iteration's rank join finds the edge side
-    // already exchange- and sort-free and shuffles ONLY the node-sized
+    // AND sorted within partitions — before the checkpoint (r18): a
+    // checkpoint, local or reliable, preserves the physical
+    // partitioning/ordering on the LogicalRDD, so every iteration's rank
+    // join finds the edge side already exchange- and sort-free and shuffles ONLY the node-sized
     // rank frame. Without this the lazily-composed walk re-shuffled and
     // re-sorted the whole edge set once per iteration (5 runtime
     // SortMergeJoins with both sides exchanged — the thing the old
     // per-round broadcast hid locally but would not have survived at a
     // scale where ranks outgrow the broadcast threshold anyway).
-    val e = e0.join(deg, "src")
+    val e = Lineage.truncate(e0.join(deg, "src")
       .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .localCheckpoint()
-    if (sharedEdges) ConnectedComponents.freeLocalCheckpoint(e0)
+      .sortWithinPartitions("src"))
+    if (sharedEdges) Lineage.free(e0)
     val nodesBase = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // __seed marks teleport targets: everyone for plain PageRank, the
@@ -366,7 +362,7 @@ object Triangles {
     // both or the upstream recomputes once per branch (measured: the
     // un-checkpointed q135 shape recomputed the order-pair self-join
     // 4x)
-    val e = canon(edges).localCheckpoint()
+    val e = Lineage.truncate(canon(edges))
     // persist + materialize: with real size stats the planner
     // broadcasts the node-sized degree frame onto the edge scan (the
     // PageRank lesson above — a stat-less deg would force two
@@ -382,11 +378,10 @@ object Triangles {
       .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
     val ka = struct(col("da").as("d"), col("a").as("n"))
     val kb = struct(col("db").as("d"), col("b").as("n"))
-    val o = withDeg.select(
+    val o = Lineage.truncate(withDeg.select(
       when(ka < kb, col("a")).otherwise(col("b")).as("src"),
       when(ka < kb, kb).otherwise(ka).as("dk"))
-      .select(col("src"), col("dk").getField("n").as("dst"), col("dk"))
-      .localCheckpoint()
+      .select(col("src"), col("dk").getField("n").as("dst"), col("dk")))
     val wedges = o.as("e1")
       .join(o.as("e2"), col("e1.src") === col("e2.src") &&
         col("e1.dk") < col("e2.dk"))
@@ -434,7 +429,7 @@ object Triangles {
     * recompute once per branch.
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
+    val e = Lineage.truncate(canonicalEdges(edges, srcCol, dstCol))
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -497,14 +492,13 @@ object KCore {
       untilStable: Boolean): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1 && rounds <= 1000, s"rounds out of range: $rounds")
-    import graft.dedup.ConnectedComponents.freeLocalCheckpoint
     // iterate the ALIVE-EDGE frame with a checkpoint per round: the
     // iterated frame is referenced by BOTH anti-joins of the next
     // round, so an un-truncated lineage doubles per round — the plan
     // tree (and anything that renders it) grows 2^rounds. Exactly the
     // distributedLabelPropagation shape; each checkpoint materializes
     // O(E_alive), which shrinks as the graph peels.
-    var alive = sym(edges).localCheckpoint()
+    var alive = Lineage.truncate(sym(edges))
     var i = 0
     var stable = false
     while (i < rounds && !stable) {
@@ -524,11 +518,10 @@ object KCore {
       // jobs for a graph that peels in fewer).
       if (nBad == 0) stable = true
       else {
-        val next = alive
+        val next = Lineage.truncate(alive
           .join(bad.withColumnRenamed("n", "src"), Seq("src"), "left_anti")
-          .join(bad.withColumnRenamed("n", "dst"), Seq("dst"), "left_anti")
-          .localCheckpoint()
-        freeLocalCheckpoint(alive)
+          .join(bad.withColumnRenamed("n", "dst"), Seq("dst"), "left_anti"))
+        Lineage.free(alive)
         alive = next
       }
       bad.unpersist(false)

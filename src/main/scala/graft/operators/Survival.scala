@@ -1080,8 +1080,7 @@ object Survival {
     // DuckDB oracle — which replays the same fixed dags — still hashes
     // identically; the gates at both SFs and the differential fuzz pin
     // that equivalence.
-    val riskRows = graft.quality.BayesAb.collectBounded(riskAll,
-      graft.quality.BayesAb.maxDriverCells, "coxPhFromCells")
+    val riskRows = graft.plans.Local.rowsOrFail(riskAll, "coxPhFromCells")
     val rs = riskAll.schema
     val zi = rs.fieldIndex("__z"); val ti = rs.fieldIndex("t")
     val di = rs.fieldIndex("__d"); val ci = rs.fieldIndex("__c")
@@ -1290,8 +1289,7 @@ object Survival {
     // optimization; see the determinism note there): every float/decimal
     // op replicates the engine expression it replaced bit-for-bit, the
     // Cramer determinant and step numerators stay EXACT BigInt.
-    val riskRows = graft.quality.BayesAb.collectBounded(riskAll,
-      graft.quality.BayesAb.maxDriverCells, "coxPh2FromCells")
+    val riskRows = graft.plans.Local.rowsOrFail(riskAll, "coxPh2FromCells")
     val rs = riskAll.schema
     val ti = rs.fieldIndex("t")
     val di = rs.fieldIndex("__d"); val ci = rs.fieldIndex("__c")

@@ -3,7 +3,8 @@ package graft.quality
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
+
+import graft.plans.Local
 
 /** The composed A/B dashboard: ONE standing per-(arm, peek) moment-cell
   * state answering the ENTIRE guardrail-to-inference chain in one read —
@@ -92,7 +93,8 @@ object AbDashboard {
     * stage operators over it need no exchanges.
     *
     * EAGER-EXECUTION CONTRACT (inherited by every from-cells reader
-    * here): ONE bounded collect ([[BayesAb.collectBounded]]) runs AT
+    * here): ONE bounded collect ([[graft.plans.Local.rowsOrFail]], the
+    * fail form: over [[graft.plans.Local.Bound]] cells it throws) runs AT
     * CONSTRUCTION TIME of the reading frame, not at its first action —
     * including any row-scale per-unit pass upstream of `cells`;
     * constructing the same read twice runs that chain twice, and the
@@ -102,8 +104,7 @@ object AbDashboard {
     * included — is built on the driver: no further construction jobs.
     */
   private[graft] def materialize(cells: DataFrame): DataFrame =
-    localFrame(cells.sparkSession,
-      BayesAb.collectBounded(cells, BayesAb.maxDriverCells, "materialize").toSeq,
+    localFrame(cells.sparkSession, Local.rowsOrFail(cells, "materialize").toSeq,
       cells.schema)
 
   /** Rows as a local relation laid out in one partition (`coalesce(1)`
@@ -111,7 +112,7 @@ object AbDashboard {
     */
   private def localFrame(spark: SparkSession, rows: Seq[Row],
       schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+    Local.frame(spark, rows, schema).coalesce(1)
 
   /** The (keys × arm × peek) spine + per-series cumulative state of a
     * cell frame, built ON THE DRIVER from its one bounded collect:
@@ -140,7 +141,7 @@ object AbDashboard {
     val local = cells.select(dims.map(k => col(k).cast("string").as(k)) ++
       (col("peek").cast("long").as("peek") +:
         measures.map { case (m, t) => col(m).cast(t).as(m) }): _*)
-    val rows = BayesAb.collectBounded(local, BayesAb.maxDriverCells, "spine")
+    val rows = Local.rowsOrFail(local, "spine")
     val nd = dims.size
     val zero: Seq[Any] = measures.map {
       case (_, LongType) => 0L

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The Bayesian A/B read — the dashboard column stakeholders actually ask
@@ -75,29 +75,6 @@ object BayesAb {
 
   /** Grid points per posterior: 2¹³ midpoints of [0, 1]. */
   val gridN: Int = 8192
-
-  /** Hard ceiling on rows any bounded-driver-fold operator may collect
-    * (BayesAb/BayesMean/BayesRate cells, the Cox risk grids). The
-    * operator contracts bound these frames by (arms × peeks) or
-    * (covariate levels × integer durations) — thousands, not millions —
-    * so hitting this means the contract was violated upstream; fail
-    * with a diagnosable error instead of a silent driver OOM at scale.
-    */
-  val maxDriverCells: Int = 4000000
-
-  /** The one bounded driver collect: at most `max` rows of `df`, or a
-    * diagnosable failure naming `what`. The bound applies BEFORE the rows
-    * reach the driver (`limit(max + 1)`), so an over-bound frame costs
-    * at most max + 1 rows of driver memory, never the whole frame.
-    */
-  private[graft] def collectBounded(df: DataFrame, max: Int, what: String): Array[Row] = {
-    val rows = df.limit(max + 1).collect()
-    require(rows.length <= max,
-      s"$what: more than $max rows exceed the driver-fold bound — the frame " +
-        "must stay bounded (arms x peeks, covariate levels x durations) per " +
-        "the operator contract")
-    rows
-  }
 
   private val ln2 = 0.6931471805599453d // the correctly-rounded double of ln 2
 
@@ -233,10 +210,9 @@ object BayesAb {
     * designed arm at every observed peek, zero-filled where silent.
     */
   private def cumCells(cells: DataFrame, arms: Seq[String]): Seq[(String, Long, Long, Long)] = {
-    val rows = collectBounded(cells.filter(col("arm").isin(arms: _*))
+    val rows = graft.plans.Local.rowsOrFail(cells.filter(col("arm").isin(arms: _*))
       .select(col("arm").cast("string"), col("peek").cast("long"),
-        col("n").cast("long"), col("s_hit").cast("long")),
-      maxDriverCells, "cumCells")
+        col("n").cast("long"), col("s_hit").cast("long")), "cumCells")
     val byCell = rows.map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
     require(byCell.size == rows.length,
       "cumCells: duplicate (arm, peek) cells in input — the additive fold " +

@@ -88,10 +88,10 @@ object BayesMean {
     // op-for-op — exact BigInt moment sums, correctly-rounded
     // decimal→double casts, [[GroupSequential.phi]] (bitwise-equal to
     // the phiCol dag the oracle renders), the same NULL guards.
-    val rows = BayesAb.collectBounded(cells.filter(col("arm").isin(arms: _*))
+    val rows = graft.plans.Local.rowsOrFail(cells.filter(col("arm").isin(arms: _*))
       .select(col("arm").cast("string"), col("peek").cast("long"),
         col("n").cast("long"), col("sy").cast(dec), col("syy").cast(dec)),
-      BayesAb.maxDriverCells, "bayesMeanKArmFromCells")
+      "bayesMeanKArmFromCells")
     val byCell = rows.map(r => (r.getString(0), r.getLong(1)) ->
       (r.getLong(2), BigInt(r.getDecimal(3).toBigInteger),
         BigInt(r.getDecimal(4).toBigInteger))).toMap

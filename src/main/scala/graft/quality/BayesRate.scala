@@ -82,10 +82,9 @@ object BayesRate {
     // one-partition shape) — pure fixed cost per read. Every landed log,
     // quantized term and ordered cumulative below replicates the
     // replaced Column dag op-for-op, so the oracle hashes unchanged.
-    val rows = BayesAb.collectBounded(cells.filter(col("arm").isin(arms: _*))
+    val rows = graft.plans.Local.rowsOrFail(cells.filter(col("arm").isin(arms: _*))
       .select(col("arm").cast("string"), col("peek").cast("long"),
-        col("e").cast("long"), col("c").cast("long")),
-      BayesAb.maxDriverCells, "bayesRateKArmFromCells")
+        col("e").cast("long"), col("c").cast("long")), "bayesRateKArmFromCells")
     val byCell = rows.map(r => (r.getString(0), r.getLong(1)) ->
       (r.getLong(2), r.getLong(3))).toMap
     require(byCell.size == rows.length,

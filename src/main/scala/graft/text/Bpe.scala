@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.{Lineage, Local}
+
 /** Byte-pair-encoding subword counting — the token accounting that packing
   * (q70/q88), mixture reports (q60) and temperature resampling (q81/q87)
   * should really budget with: a whitespace/regex count systematically
@@ -139,7 +141,7 @@ object Bpe {
     * dictionary — explode adjacent symbol pairs weighted by word freq,
     * take the max-count pair (ties → lexicographic (l, r), so training is
     * deterministic on any engine/partitioning), apply the merge to every
-    * word, localCheckpoint to cut the growing lineage.
+    * word, [[graft.plans.Lineage.truncate]] to cut the growing lineage.
     *
     * Scale: per-round cost is a dictionary-sized shuffle + a 1-row
     * collect; rounds are inherently sequential (each merge depends on the
@@ -160,9 +162,8 @@ object Bpe {
     val symbolizeUdf = udf((w: String) => symbolize(w))
     val mergeUdf = udf((syms: Seq[String], l: String, r: String) =>
       applyMerge(syms.toIndexedSeq, l, r))
-    var dict = wordDict(docs, textCol)
-      .select(symbolizeUdf(col("word")).as("syms"), col("freq"))
-      .localCheckpoint()
+    var dict = Lineage.truncate(wordDict(docs, textCol)
+      .select(symbolizeUdf(col("word")).as("syms"), col("freq")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (!done && merges.length < numMerges) {
@@ -179,14 +180,13 @@ object Bpe {
       else {
         val (l, r) = (top(0).getAs[String]("l"), top(0).getAs[String]("r"))
         merges += ((l, r))
-        val updated = dict
-          .select(mergeUdf(col("syms"), lit(l), lit(r)).as("syms"), col("freq"))
-          .localCheckpoint()
-        graft.dedup.ConnectedComponents.freeLocalCheckpoint(dict)
+        val updated = Lineage.truncate(dict
+          .select(mergeUdf(col("syms"), lit(l), lit(r)).as("syms"), col("freq")))
+        Lineage.free(dict)
         dict = updated
       }
     }
-    graft.dedup.ConnectedComponents.freeLocalCheckpoint(dict)
+    Lineage.free(dict)
     merges.toSeq
   }
 
@@ -226,7 +226,8 @@ object Bpe {
   /** [[trainMerges]] on the COLLECTED dictionary — the practical trainer
     * once the (word, freq) aggregate fits driver memory (it is vocabulary
     * bookkeeping, like k-means centroids or PQ codebooks, not corpus
-    * data; `maxWords` makes the bound explicit and the failure loud).
+    * data; `maxWords` makes the bound explicit and the failure loud, the
+    * fail form of [[graft.plans.Local]]'s bounded collect).
     */
   def trainMergesLocal(
       docs: DataFrame,
@@ -235,9 +236,8 @@ object Bpe {
       minPairCount: Long = 1L,
       maxWords: Int = 1 << 22
   ): Seq[(String, String)] = {
-    val rows = wordDict(docs, textCol).limit(maxWords + 1).collect()
-    require(rows.length <= maxWords,
-      s"dictionary exceeds maxWords=$maxWords — use trainMerges (distributed)")
+    val rows = Local.rowsOrFail(wordDict(docs, textCol),
+      "trainMergesLocal dictionary (use trainMerges, distributed)", maxWords)
     trainMergesFromDict(
       rows.map(r => (r.getString(0), r.getLong(1))).toSeq, numMerges, minPairCount)
   }

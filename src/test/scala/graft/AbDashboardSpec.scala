@@ -1,6 +1,6 @@
 package graft
 
-import graft.quality.{AbDashboard, Association, BayesAb, RatioMetric, SequentialTests}
+import graft.quality.{AbDashboard, Association, RatioMetric, SequentialTests}
 import graft.queries.CoreQueries
 import graft.streaming.{StoreMaintenance, StreamingOps}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -528,13 +528,23 @@ class AbDashboardSpec extends SparkSpec {
   }
 
   test("collectBounded: a frame over the bound fails before its rows reach the driver") {
+    // the fail form (the folds): over the bound it throws, naming the caller
     val four = (1 to 4).toDF("v")
-    val e = intercept[IllegalArgumentException](BayesAb.collectBounded(four, 3, "probe"))
+    val e = intercept[IllegalArgumentException](graft.plans.Local.rowsOrFail(four, "probe", 3))
     assert(e.getMessage === "requirement failed: probe: more than 3 rows exceed " +
-      "the driver-fold bound — the frame must stay bounded (arms x peeks, " +
-      "covariate levels x durations) per the operator contract")
-    assert(BayesAb.collectBounded(four, 4, "probe").map(_.getInt(0)).sorted.toSeq ===
+      "the driver bound — the frame must stay bounded per the operator contract")
+    assert(graft.plans.Local.rowsOrFail(four, "probe", 4).map(_.getInt(0)).sorted.toSeq ===
       Seq(1, 2, 3, 4))
+    // ... and keeps NULL cells
+    val withNull = Seq(Some(1), None).toDF("v")
+    assert(graft.plans.Local.rowsOrFail(withNull, "probe", 2).count(_.isNullAt(0)) === 1)
+    // the fallback form (the twins): None at max + 1 rows, None on a NULL
+    // cell or a non-positive bound, the rows at exactly max
+    assert(graft.plans.Local.rows(four, 3).isEmpty)
+    assert(graft.plans.Local.rows(withNull, 2).isEmpty)
+    assert(graft.plans.Local.rows(four, 0).isEmpty)
+    assert(graft.plans.Local.rows(four, 4).map(_.map(_.getInt(0)).sorted.toSeq) ===
+      Some(Seq(1, 2, 3, 4)))
     // materialize lays the collected frame out in one partition
     assert(AbDashboard.materialize(four.repartition(3)).rdd.getNumPartitions === 1)
   }

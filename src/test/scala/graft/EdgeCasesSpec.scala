@@ -259,8 +259,9 @@ class EdgeCasesSpec extends SparkSpec {
     val cols = Seq("k,1", "k,2", "k3", "k4")
     val combos = graft.schema.SchemaOps.columnCombinations(cols).toSeq
     // budgets 1 and 2 chunk the levels of 4, 6 and 4 combinations;
-    // solutions must come back via the cid index (the comma-joined label
-    // is ambiguous for these names)
+    // solutions must come back by matching the duplicated gids to the
+    // chunk's combinations by position (the comma-joined label is
+    // ambiguous for these names)
     val want = PkOracle.minimalKeys(d, combos).sortBy(_.size)
     assert(want.flatten.exists(_.contains(",")))
     for (budget <- Seq(1, 2, 8))

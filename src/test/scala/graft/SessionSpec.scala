@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-
 /** graft.Session is the one SparkSession factory: the spec session is the
   * one it builds, and no other main-code site builds its own.
   */
@@ -22,18 +19,8 @@ class SessionSpec extends SparkSpec {
   }
 
   test("no main-code file but Session.scala calls SparkSession.builder(") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    assert(files.nonEmpty)
-    def isComment(line: String): Boolean = {
-      val t = line.trim
-      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-    }
-    val callers = for {
-      f <- files if f.getFileName.toString != "Session.scala"
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if !isComment(line) && line.contains("SparkSession.builder(")
-    } yield s"$f:${i + 1}"
+    val callers = MainSources.hits(_.contains("SparkSession.builder("))
+      .filterNot(_.contains("/graft/Session.scala:"))
     assert(callers.isEmpty, callers.mkString("builder copies outside Session.scala: ", ", ", ""))
   }
 }
